@@ -10,6 +10,8 @@
 #   q1,q2     comma-separated SparkEntry.queries names (no spaces)
 #   sfDir     default /root/testdata/sf0.1
 #   iters     default 3 (pass-major; median is the headline)
+# SPARK_GRAFT_CPUS (env) defaults to $(nproc), the core count Bench and
+# the test suite run with on the same host.
 #
 # For an A/B: run once on the A binary, recompile, run again on the B
 # binary — SAME window, SAME subset, then compare per-query medians in
@@ -21,7 +23,7 @@ set -euo pipefail
 [ $# -ge 2 ] || { echo "usage: ab_bench.sh <out.json> <q1,q2,...> [sfDir] [iters]" >&2; exit 2; }
 DIR="$(cd "$(dirname "$0")/.." && pwd)"
 OUT="$1"; ONLY="$2"; SF="${3:-/root/testdata/sf0.1}"; ITERS="${4:-3}"
-SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-32}" \
+SPARK_GRAFT_SF_DIR="$SF" SPARK_GRAFT_CPUS="${SPARK_GRAFT_CPUS:-$(nproc)}" \
 SPARK_GRAFT_ONLY="$ONLY" SPARK_GRAFT_ITERS="$ITERS" \
 SPARK_GRAFT_BENCH_OUT="$OUT" \
   "$DIR/scripts/jrun.sh" graft.Bench >/dev/null

@@ -20,8 +20,8 @@ for p in java.base/java.lang java.base/java.lang.invoke \
          java.base/sun.util.calendar; do
   FLAGS="$FLAGS --add-opens $p=ALL-UNNAMED"
 done
-# GRAFT_JAVA_OPTS: extra -D flags (e.g. -Dgraft.stateStoreProvider=rocksdb
-# for the streaming suite's RocksDB A/B)
+# GRAFT_JAVA_OPTS: extra -D flags, e.g. for the streaming suite's RocksDB A/B:
+# -Dspark.sql.streaming.stateStore.providerClass=org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider
 exec java -cp "$CP" $FLAGS ${GRAFT_JAVA_OPTS:-} \
   -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   "-Xmx${SPARK_DRIVER_MEM:-16g}" "$@"

@@ -365,12 +365,12 @@ object DedupIndex {
     new DedupIndex(corpus.sparkSession, bands, docs, idCol, meta)
   }
 
-  private val metaCache =
-    scala.collection.concurrent.TrieMap[(String, String), Meta]()
+  private[operators] val metaCache =
+    new graft.sources.PartitionMaintenance.GenerationCache[Meta]
 
   /** Load a saved index; both table scans stay lazy (and pruned at
-    * probe time). The hash-family META is cached per (dir, generation)
-    * — generation = the meta dir's file listing with mtimes, a cheap
+    * probe time). The hash-family META is cached per dir at its latest
+    * generation — the meta dir's file listing with mtimes, a cheap
     * driver-side FS stat — so the five streamed ingest loops pay ONE
     * Spark JSON job per saved index instead of one per micro-batch
     * (round-19 judge item #5). `save` rewrites `dir/meta` with a fresh
@@ -379,16 +379,14 @@ object DedupIndex {
     * Config only, never data: the corpus scans below are re-created on
     * every load so appended part files are always visible. */
   def load(spark: SparkSession, dir: String, idCol: String): DedupIndex = {
-    val meta = metaCache.getOrElseUpdate(
-      (s"$dir/meta", graft.sources.PartitionMaintenance
-        .dirGeneration(spark, s"$dir/meta")), {
-        val m = spark.read.json(s"$dir/meta").head()
-        Meta(
-          m.getAs[Long]("shingleK").toInt, m.getAs[Long]("numBands").toInt,
-          m.getAs[Long]("rowsPerBand").toInt, m.getAs[Long]("seed"),
-          m.getAs[Long]("bandBuckets").toInt, m.getAs[Long]("idBuckets").toInt,
-          m.getAs[Boolean]("sqlMirroredHashes"))
-      })
+    val meta = metaCache.get(spark, s"$dir/meta") {
+      val m = spark.read.json(s"$dir/meta").head()
+      Meta(
+        m.getAs[Long]("shingleK").toInt, m.getAs[Long]("numBands").toInt,
+        m.getAs[Long]("rowsPerBand").toInt, m.getAs[Long]("seed"),
+        m.getAs[Long]("bandBuckets").toInt, m.getAs[Long]("idBuckets").toInt,
+        m.getAs[Boolean]("sqlMirroredHashes"))
+    }
     new DedupIndex(spark,
       spark.read.parquet(s"$dir/bands"),
       spark.read.parquet(s"$dir/docs"), idCol, meta)

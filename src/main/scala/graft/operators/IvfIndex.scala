@@ -370,13 +370,13 @@ object IvfIndex {
     graft.sources.PartitionMaintenance.compact(spark, tables(dir),
       maxFilesPerPartition)
 
-  private val routerCache =
-    scala.collection.concurrent.TrieMap[(String, String), Router]()
+  private[operators] val routerCache =
+    new graft.sources.PartitionMaintenance.GenerationCache[Router]
 
   /** Load a saved index; the corpus scan stays lazy (and cell-pruned
     * at search time). Detects the router family from the layout. The
-    * ROUTER is cached per (dir, generation) — the [[DedupIndex.load]]
-    * discipline: the ingest loop's per-batch load paid a centroid
+    * ROUTER is cached per dir at its latest generation — the
+    * [[DedupIndex.load]] discipline: the ingest loop's per-batch load paid a centroid
     * read+collect (seeded) or a multi-job ML model load (kmeans) per
     * micro-batch for a router that appends never change; `save`
     * rewrites the router dir (new part names/mtimes) so a refit is
@@ -387,19 +387,15 @@ object IvfIndex {
     val fs = seededPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val router: Router =
       if (fs.exists(seededPath))
-        routerCache.getOrElseUpdate((s"$dir/seeded_router",
-          graft.sources.PartitionMaintenance
-            .dirGeneration(spark, s"$dir/seeded_router")), {
+        routerCache.get(spark, s"$dir/seeded_router") {
           val centers = spark.read.parquet(seededPath.toString)
             .collect()
             .map(r => (r.getInt(0), r.getSeq[Double](1).toArray))
             .sortBy(_._1)
           new SeededRouter(spark, centers)
-        })
+        }
       else
-        routerCache.getOrElseUpdate((s"$dir/router",
-          graft.sources.PartitionMaintenance
-            .dirGeneration(spark, s"$dir/router")),
+        routerCache.get(spark, s"$dir/router")(
           new KMeansRouter(KMeansModel.load(s"$dir/router")))
     new IvfIndex(router, spark.read.parquet(s"$dir/corpus"), idCol)
   }

@@ -273,29 +273,27 @@ object SemDedupIndex {
     graft.sources.PartitionMaintenance.compact(spark, tables(dir),
       maxFilesPerPartition)
 
-  private val metaCache =
-    scala.collection.concurrent.TrieMap[(String, String),
-      (Meta, Option[KMeansModel])]()
+  private[operators] val metaCache = new graft.sources.PartitionMaintenance
+    .GenerationCache[(Meta, Option[KMeansModel])]
 
   /** Load a saved index; the corpus scan stays lazy (and cell-pruned at
-    * probe time). META + ROUTER are cached per (dir, generation) — the
+    * probe time). META + ROUTER are cached per dir at its latest
+    * generation — the
     * [[DedupIndex.load]] discipline: one Spark read per saved artifact
     * generation instead of one per micro-batch; the corpus frame is
     * re-created every load so appends stay visible. */
   def load(spark: SparkSession, dir: String, idCol: String): SemDedupIndex = {
-    val (meta, router) = metaCache.getOrElseUpdate(
-      (s"$dir/meta", graft.sources.PartitionMaintenance
-        .dirGeneration(spark, s"$dir/meta")), {
-        val m = spark.read.json(s"$dir/meta").head()
-        val meta = Meta(m.getAs[String]("routerType"),
-          m.getAs[Long]("orthantBits").toInt, m.getAs[Long]("nlist").toInt,
-          m.getAs[Long]("seed"), m.getAs[Long]("cellIter").toInt)
-        val router =
-          if (meta.routerType == "kmeans")
-            Some(KMeansModel.load(s"$dir/router"))
-          else None
-        (meta, router)
-      })
+    val (meta, router) = metaCache.get(spark, s"$dir/meta") {
+      val m = spark.read.json(s"$dir/meta").head()
+      val meta = Meta(m.getAs[String]("routerType"),
+        m.getAs[Long]("orthantBits").toInt, m.getAs[Long]("nlist").toInt,
+        m.getAs[Long]("seed"), m.getAs[Long]("cellIter").toInt)
+      val router =
+        if (meta.routerType == "kmeans")
+          Some(KMeansModel.load(s"$dir/router"))
+        else None
+      (meta, router)
+    }
     new SemDedupIndex(spark, spark.read.parquet(s"$dir/corpus"),
       idCol, meta, router)
   }

@@ -353,6 +353,33 @@ object PartitionMaintenance {
       .mkString(";")
   }
 
+  /** The index loaders' per-JVM cache of values read from a SMALL
+    * artifact dir, keyed by dir and holding only the dir's LATEST
+    * [[dirGeneration]]. A re-save replaces the dir's entry instead of
+    * adding one, so a long-lived session whose ingest loop re-saves an
+    * index every pass keeps one entry per dir, not one per pass. */
+  final class GenerationCache[V] {
+    private val entries =
+      scala.collection.concurrent.TrieMap[String, (String, V)]()
+
+    /** The value for `dir`'s current generation; `load` runs on a miss
+      * and its result replaces whatever the dir held before. */
+    def get(spark: SparkSession, dir: String)(load: => V): V = {
+      val gen = dirGeneration(spark, dir)
+      entries.get(dir) match {
+        case Some((g, v)) if g == gen => v
+        case _ =>
+          val v = load
+          entries.put(dir, (gen, v))
+          v
+      }
+    }
+
+    /** The cached generation per dir. */
+    def generations: Map[String, String] =
+      entries.iterator.map { case (d, (g, _)) => d -> g }.toMap
+  }
+
   /** One row per partition directory: (table, partition, files, bytes)
     * — the number a maintenance job alarms on is `files`. An
     * interrupted compact swap surfaces here too: its duplicate copies

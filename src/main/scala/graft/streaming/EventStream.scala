@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Structured-Streaming form of the event-time aggregation (the
   * reference is batch-only — SURVEY.md §2.11 — but a training-data
@@ -47,54 +46,18 @@ object EventStream {
   /** Replay parquet events against the static customer table through
     * the stream-static plan; returns the completed result. */
   def replayEnriched(spark: SparkSession, dir: String,
-                     queryName: String = "stream_enrich",
-                     statePartitions: Option[Int] = Some(8)): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
+                     queryName: String = "stream_enrich"): DataFrame = {
     val customers = spark.read.parquet(s"$dir/customer.parquet")
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(n => spark.conf.set("spark.sql.shuffle.partitions", n))
-    try {
-      val q = enrichedTotalsByNation(stream, customers).writeStream
-        .outputMode("complete")
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    }
-    spark.table(queryName)
+    ReplayStage.memorySink(
+      enrichedTotalsByNation(ReplayStage.tableStream(spark, dir), customers),
+      queryName, "complete")
   }
 
   /** Replay parquet events through the streaming plan into an
-    * in-memory table; returns the completed result. The file-stream
-    * source requires a directory, so the table is selected with a glob
-    * filter over `dir`. */
+    * in-memory table; returns the completed result. */
   def replayParquet(spark: SparkSession, dir: String,
-                    glob: String = "events.parquet",
-                    queryName: String = "stream_hourly",
-                    statePartitions: Option[Int] = Some(8)): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/$glob").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob).parquet(dir)
-    // state partitions = shuffle partitions at first start; a bounded
-    // replay with small keyed state (type × window) runs fastest on a
-    // few state stores — scoped to this start, restored after (a real
-    // deployment passes None and sizes the session conf to the cluster)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(n => spark.conf.set("spark.sql.shuffle.partitions", n))
-    try {
-      val q = hourlyByType(graft.sources.Tables.tsNanosNormalized(stream)).writeStream
-        .outputMode("complete")
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    }
-    spark.table(queryName)
-  }
+                    queryName: String = "stream_hourly"): DataFrame =
+    ReplayStage.memorySink(hourlyByType(graft.sources.Tables
+      .tsNanosNormalized(ReplayStage.tableStream(spark, dir))),
+      queryName, "complete")
 }

@@ -2,14 +2,20 @@ package graft.streaming
 
 import java.nio.file.{Files, Path, Paths}
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 import org.apache.spark.sql.types.{StructType, TimestampNTZType, TimestampType}
 
 import scala.jdk.CollectionConverters._
 
-/** Shared staging for finite-file stream replays that need an explicit
-  * end-of-stream watermark flush (the pattern StatefulSessions
-  * introduced): a temp dir of symlinks to the real events parquet plus
+/** The runner and staging of every finite-file stream replay. Every
+  * replay starts its query through [[runToEnd]] (via [[memorySink]],
+  * [[foreachBatch]] or [[lateDropReplay]]), so the trigger and the
+  * state-partition scope live here once.
+  *
+  * Replays that need an explicit end-of-stream watermark flush (the
+  * pattern StatefulSessions introduced) stage a temp dir of symlinks to
+  * the real events parquet plus
   * ONE sentinel row (`user_id = -1`) dated `leadNs` past the global max
   * event time. The sentinel's only job is to advance the watermark past
   * every open window/session deadline so the final no-data batch emits
@@ -51,11 +57,6 @@ object ReplayStage {
       finally s.close()
     }
   }
-
-  /** Delete a staged replay dir's parts and the dir itself — the
-    * finally-cleanup every finite-file replay runs. */
-  private[streaming] def cleanupStaged(staged: Path): Unit =
-    deleteRecursively(staged)
 
   /** Run `fold` unless this (idxDir, batchId) already ran — the
     * `_appended_` skip fast-path shared by the four ingest-loop replay
@@ -220,27 +221,74 @@ object ReplayStage {
     graft.sources.Tables.tsNanosNormalized(reader.parquet(staged.dir.toString))
   }
 
-  /** Streaming source over `dir/events.parquet` for COMPLETE-mode
-    * replays (no sentinel needed — complete mode re-emits everything,
-    * so no end-of-stream watermark flush is required): handles both
-    * layouts (single file and directory of part files) with an explicit
-    * reader schema. Raw source columns; callers normalize `ts` via
-    * [[graft.sources.Tables.tsNanosNormalized]]. */
-  def completeModeStream(spark: SparkSession, dir: String): DataFrame = {
-    val src = s"$dir/events.parquet"
+  /** Streaming source over the table `dir/<table>.parquet` with an
+    * explicit reader schema, for replays that need no end-of-stream
+    * watermark flush (complete mode re-emits everything; stateless and
+    * dedup replays emit as they go). Handles both layouts: a single
+    * file and a directory of part files. Raw source columns; callers
+    * normalize `ts` via [[graft.sources.Tables.tsNanosNormalized]]. */
+  def tableStream(spark: SparkSession, dir: String,
+                  table: String = "events"): DataFrame = {
+    val src = s"$dir/$table.parquet"
     val schema = spark.read.parquet(src).schema
     if (Files.isDirectory(Paths.get(src)))
       spark.readStream.schema(schema)
         .option("pathGlobFilter", "*.parquet").parquet(src)
     else
       spark.readStream.schema(schema)
-        .option("pathGlobFilter", "events.parquet").parquet(dir)
+        .option("pathGlobFilter", s"$table.parquet").parquet(dir)
+  }
+
+  /** The state-partition count of every replay. A stateful query fixes
+    * it at first start from `spark.sql.shuffle.partitions`, and a
+    * bounded replay's small keyed state runs fastest on a handful of
+    * stores, not on the session default. [[runToEnd]] scopes the conf
+    * to this value while its query starts and runs. */
+  val StatePartitions = 8
+
+  /** The one place a replay starts a streaming query: `sink` configures
+    * the writer, the query runs with an AvailableNow trigger to the end
+    * of its input on [[StatePartitions]] shuffle partitions, and the
+    * session's own value is restored afterwards, also on failure.
+    * A foreachBatch replay's per-batch jobs plan on the same count
+    * (AQE coalesces their shuffles). Returns the finished query (its
+    * progress carries the per-batch state-operator metrics). The
+    * state-store provider is Spark's
+    * `spark.sql.streaming.stateStore.providerClass`, read from the
+    * session at start like any other conf. */
+  private[streaming] def runToEnd[T](stream: Dataset[T])
+      (sink: DataStreamWriter[T] => DataStreamWriter[T]): StreamingQuery = {
+    val spark = stream.sparkSession
+    val key = "spark.sql.shuffle.partitions"
+    val prev = spark.conf.get(key)
+    spark.conf.set(key, StatePartitions.toLong)
+    try {
+      val q = sink(stream.writeStream).trigger(Trigger.AvailableNow()).start()
+      q.awaitTermination()
+      q
+    } finally spark.conf.set(key, prev)
+  }
+
+  /** Replay `stream` in `outputMode` into the memory table `queryName`
+    * and return the finished table. */
+  def memorySink[T](stream: Dataset[T], queryName: String,
+                    outputMode: String): DataFrame = {
+    runToEnd(stream)(
+      _.outputMode(outputMode).format("memory").queryName(queryName))
+    stream.sparkSession.table(queryName)
+  }
+
+  /** Replay `stream` through the per-micro-batch function `f`. */
+  def foreachBatch(stream: DataFrame, queryName: String)
+                  (f: (DataFrame, Long) => Unit): Unit = {
+    runToEnd(stream)(_.foreachBatch(f).queryName(queryName))
+    ()
   }
 
   /** Write `df` as ONE parquet part named `name` under `dir` with the
     * given mtime — a staged replay's processing order is mtime order. */
-  private[streaming] def writePart(df: DataFrame, dir: Path, name: String,
-                                   mtimeMs: Long): Unit = {
+  private def writePart(df: DataFrame, dir: Path, name: String,
+                        mtimeMs: Long): Unit = {
     val scratch = Files.createTempDirectory("graft_replay_part")
     df.coalesce(1).write
       .mode(org.apache.spark.sql.SaveMode.Overwrite).parquet(scratch.toString)
@@ -257,12 +305,59 @@ object ReplayStage {
     deleteRecursively(scratch)
   }
 
+  /** Stage `parts` as one parquet file each into a temp dir with
+    * increasing mtimes — the file source processes oldest mtime first,
+    * so part i is micro-batch i — replay them one file per trigger
+    * through `body`, and delete the staging dir afterwards. The shared
+    * staging of [[lateDropReplay]] and the four ingest loops. */
+  private[streaming] def replayParts[A](parts: Seq[DataFrame])
+                                       (body: DataFrame => A): A = {
+    val staged = Files.createTempDirectory("graft_replay_parts")
+    try {
+      parts.zipWithIndex.foreach { case (p, i) =>
+        writePart(p, staged, f"$i%02d.parquet", (i + 1) * 1000000L)
+      }
+      body(parts.head.sparkSession.readStream.schema(parts.head.schema)
+        .option("pathGlobFilter", "*.parquet")
+        .option("maxFilesPerTrigger", 1)
+        .parquet(staged.toString))
+    } finally deleteRecursively(staged)
+  }
+
+  /** `df` cut into `n` ID-ORDERED parts: the id range [lo, hi] split
+    * into `n` equal spans (two tiny aggregates, no collect of ids). For
+    * n = 2 the single cut lo + (hi − lo)/2 equals the midpoint
+    * (lo + hi)/2 (sum and difference share parity). */
+  private[streaming] def idRangeParts(df: DataFrame, idCol: String,
+                                      n: Int): Seq[DataFrame] = {
+    import org.apache.spark.sql.functions.{col, max, min}
+    require(n >= 1, s"numBatches=$n")
+    val mm = df.agg(min(col(idCol)), max(col(idCol))).head()
+    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
+    val cuts = (1 until n).map(i => lo + (hi - lo) * i / n)
+    val bounds = (Long.MinValue +: cuts) :+ Long.MaxValue
+    (0 until n).map(i =>
+      df.where(col(idCol) > bounds(i) && col(idCol) <= bounds(i + 1)))
+  }
+
+  /** `df` cut into `n` ARRIVAL-ordered parts by the portable hash
+    * `md5('arr:' || id) % n` — deliberately decorrelated from id
+    * order. */
+  private[streaming] def arrivalParts(df: DataFrame, idCol: String,
+                                      n: Int): Seq[DataFrame] = {
+    import org.apache.spark.sql.functions.{col, concat, lit, pmod}
+    require(n >= 1, s"numBatches=$n")
+    val arrB = pmod(graft.functions.HashFns.md5Hash60(
+      concat(lit("arr:"), col(idCol).cast("string"))), lit(n.toLong))
+    (0 until n).map(i => df.where(arrB === i))
+  }
+
   /** Run an UPDATE/APPEND-mode replay with a WITNESSED late-data drop —
     * the staging StreamPsiUpdate introduced, shared by every monitor
     * that wants the 24/7 posture proven: stage four time-ordered parts
     * (on-time rows → empty gap → the `lateRule` rows → a sentinel two
     * days past `maxTsNanos`), process one file per micro-batch, run the
-    * caller's stateful `plan` over the stream in `outputMode` into a
+    * caller's stateful `plan` over the stream in append mode into a
     * memory sink named `queryName`, and REQUIRE that the watermark
     * dropped rows.
     *
@@ -282,93 +377,21 @@ object ReplayStage {
     * out-of-order late file IS the fixture. */
   def lateDropReplay(spark: SparkSession, norm: DataFrame,
                      lateRule: org.apache.spark.sql.Column, maxTsNanos: Long,
-                     queryName: String, statePartitions: Option[Int],
-                     outputMode: String = "append")
+                     queryName: String)
                     (plan: DataFrame => DataFrame): Unit = {
     import org.apache.spark.sql.functions.lit
     val dayNs = 86400L * 1000000000L
-    val staged = Files.createTempDirectory("graft_late_replay")
-    try {
-      writePart(norm.where(!lateRule), staged, "00_ontime.parquet", 1000000L)
-      writePart(norm.where(lit(false)), staged, "01_gap.parquet", 2000000L)
-      writePart(norm.where(lateRule), staged, "02_late.parquet", 3000000L)
-      writePart(sentinelFrame(spark, norm.schema, maxTsNanos + 2 * dayNs),
-        staged, "zz_sentinel.parquet", 4000000L)
-
-      val stream = spark.readStream.schema(norm.schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged.toString)
-      withStatePartitions(spark, statePartitions) {
-        val q = plan(stream)
-          .writeStream
-          .outputMode(outputMode)
-          .format("memory").queryName(queryName)
-          .trigger(org.apache.spark.sql.streaming.Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-        val dropped = q.recentProgress.iterator
-          .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
-        require(dropped > 0,
-          s"lateDropReplay($queryName): expected the watermark to drop " +
-            s"the staged late rows, but numRowsDroppedByWatermark = $dropped")
-      }
-    } finally deleteRecursively(staged)
-  }
-
-  /** State-store provider toggle for the WHOLE streaming suite: every
-    * module starts its query inside [[withStatePartitions]], which
-    * applies `spark.sql.streaming.stateStore.providerClass` from (in
-    * precedence order) the explicit `providerClass` argument or the
-    * `graft.stateStoreProvider` system property. Unset, Spark's default
-    * in-heap HDFSBackedStateStoreProvider runs; set it to
-    * [[RocksDbProvider]] and all 24+ monitors run on RocksDB state —
-    * the 100-TB posture, where per-key state must spill off-heap
-    * instead of growing the executor heap. The provider only changes
-    * WHERE state lives, never what the query emits; the
-    * provider-independence spec replays a chained-stateful query under
-    * both and asserts identical output. */
-  val ProviderConfKey = "spark.sql.streaming.stateStore.providerClass"
-  val RocksDbProvider =
-    "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-  val ProviderProp = "graft.stateStoreProvider"
-
-  /** Run `body` with `spark.sql.shuffle.partitions` temporarily set to
-    * `statePartitions` (a stateful query's state-partition count is
-    * fixed at first start; a bounded replay wants a handful, not the
-    * session default — a production 24/7 stream would size the session
-    * conf to the cluster and pass None) and the state-store provider
-    * applied (see [[ProviderConfKey]] above).
-    *
-    * The `graft.statePartitions` system property overrides the
-    * caller's count for the WHOLE suite — the A/B knob for sizing the
-    * update-monitor family's state-partition count (a deployment sizes
-    * this to its cluster; the replays' Some(8) is a local default, and
-    * the override keeps the experiment a flag instead of a recompile).
-    * State partitioning never changes WHAT a monitor emits — the
-    * registered oracles pin that — only how its state shards. */
-  def withStatePartitions[A](spark: SparkSession, statePartitions: Option[Int],
-      providerClass: Option[String] = None)
-      (body: => A): A = {
-    val prev = spark.conf.get("spark.sql.shuffle.partitions")
-    val prevProvider = spark.conf.getOption(ProviderConfKey)
-    sys.props.get("graft.statePartitions").map(_.toInt).orElse(statePartitions)
-      .foreach(n => spark.conf.set("spark.sql.shuffle.partitions", n))
-    providerClass.orElse(sys.props.get(ProviderProp))
-      .foreach { p =>
-        spark.conf.set(ProviderConfKey, p)
-        // self-documenting A/B runs: the applied provider is visible in
-        // the run log, so a bench JSON can never silently claim a
-        // provider that was not engaged
-        System.err.println(s"[graft] state-store provider = $p")
-      }
-    try body
-    finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prev)
-      prevProvider match {
-        case Some(p) => spark.conf.set(ProviderConfKey, p)
-        case None    => spark.conf.unset(ProviderConfKey)
-      }
+    val parts = Seq(norm.where(!lateRule), norm.where(lit(false)),
+      norm.where(lateRule),
+      sentinelFrame(spark, norm.schema, maxTsNanos + 2 * dayNs))
+    val q = replayParts(parts) { stream =>
+      runToEnd(plan(stream))(
+        _.outputMode("append").format("memory").queryName(queryName))
     }
+    val dropped = q.recentProgress.iterator
+      .flatMap(_.stateOperators).map(_.numRowsDroppedByWatermark).sum
+    require(dropped > 0,
+      s"lateDropReplay($queryName): expected the watermark to drop " +
+        s"the staged late rows, but numRowsDroppedByWatermark = $dropped")
   }
 }

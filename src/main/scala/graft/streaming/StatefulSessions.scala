@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful streaming sessionization via `flatMapGroupsWithState` —
   * the custom-state counterpart of the batch `Relational.sessionize`
@@ -92,8 +92,7 @@ object StatefulSessions {
     */
   def replayParquet(spark: SparkSession, dir: String, gapMs: Long,
                     queryName: String = "stateful_sessions",
-                    maxFilesPerTrigger: Option[Int] = None,
-                    statePartitions: Option[Int] = Some(8)): Dataset[Session] = {
+                    maxFilesPerTrigger: Option[Int] = None): Dataset[Session] = {
     import spark.implicits._
     // shared staging (symlinks + watermark sentinel at max(ts) +
     // gap + 1 ms, the flush deadline of the last open session);
@@ -101,7 +100,7 @@ object StatefulSessions {
     // requires time-ordered parts — and the staging dir is removed when
     // the replay terminates
     val staged = ReplayStage.stageEvents(spark, dir, (gapMs + 1L) * 1000000L)
-    try {
+    val sink = try {
       val evs = ReplayStage.readStream(spark, staged, maxFilesPerTrigger)
         .selectExpr("user_id", "event_id", "ts DIV 1000000 AS ts_ms",
           "timestamp_millis(ts DIV 1000000) AS ts_t")
@@ -113,19 +112,9 @@ object StatefulSessions {
       // column), which silently un-advances the watermark and strands the
       // session ending at the global max ts. A typed filter on the OUTPUT
       // of flatMapGroupsWithState can't be pushed through it.
-      // A bounded replay carries tiny state (one open session per user),
-      // so a handful of state partitions beats the session default; a
-      // production 24/7 stream would pass None and size the session conf
-      // to the cluster (state partitioning is fixed at first start).
-      ReplayStage.withStatePartitions(spark, statePartitions) {
-        val q = sessionize(evs, gapMs).filter(_.user_id >= 0).writeStream
-          .outputMode("append")
-          .format("memory").queryName(queryName)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      ReplayStage.memorySink(sessionize(evs, gapMs).filter(_.user_id >= 0),
+        queryName, "append")
     } finally staged.cleanup()
-    spark.table(queryName).as[Session]
+    sink.as[Session]
   }
 }

@@ -1,7 +1,6 @@
 package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming as-of enrichment: each event on the stream is joined to
   * the latest row of a STATIC, slowly-changing dimension at-or-before
@@ -51,10 +50,8 @@ object StreamAsOf {
         }
     val bHist = spark.sparkContext.broadcast(hist)
 
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
     val stream = graft.sources.Tables.tsNanosNormalized(
-        spark.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir))
+        ReplayStage.tableStream(spark, dir))
       .selectExpr("event_id", "user_id", "ts DIV 1000000 AS t")
       .as[(Long, Long, Long)]
 
@@ -72,13 +69,7 @@ object StreamAsOf {
       }
     }
 
-    val q = enriched.writeStream
-      .outputMode("append")
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    ReplayStage.memorySink(enriched, queryName, "append")
   }
 
   /** The OVERSIZED-dimension variant: the dimension stays a distributed
@@ -96,19 +87,16 @@ object StreamAsOf {
       .selectExpr("o_custkey",
         "unix_millis(CAST(o_orderdate AS TIMESTAMP)) AS ord_ms", "o_orderkey")
 
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
     val stream = graft.sources.Tables.tsNanosNormalized(
-        spark.readStream.schema(schema)
-          .option("pathGlobFilter", "events.parquet").parquet(dir))
+        ReplayStage.tableStream(spark, dir))
       .selectExpr("event_id", "user_id", "ts DIV 1000000 AS t")
 
     // per-batch results land in a driver buffer — bounded by the
     // replay's OUTPUT exactly like the memory sink the other replays use
     val acc = java.util.Collections.synchronizedList(
       new java.util.ArrayList[Enriched]())
-    val q = stream.writeStream
-      .outputMode("append")
-      .foreachBatch { (batch: DataFrame, _: Long) =>
+    ReplayStage.foreachBatch(stream, "stream_asof_distributed") {
+      (batch: DataFrame, _: Long) =>
         val joined = graft.operators.Relational.asOfLatest(
             batch, dim, "user_id", "o_custkey",
             col("t"), col("ord_ms"), "event_id", "o_orderkey")
@@ -116,10 +104,7 @@ object StreamAsOf {
           .as[Enriched].collect()
         acc.addAll(java.util.Arrays.asList(joined: _*))
         ()
-      }
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
+    }
     import scala.jdk.CollectionConverters._
     acc.asScala.toSeq.toDF()
   }

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Streaming clamped running balance — the stateful twin of
   * [[graft.operators.RunningOps.clampedBalance]] (q213). The batch side
@@ -63,14 +63,13 @@ object StreamBalance {
     * errors consume it); shares q213's oracle verbatim. */
   def replayParquet(spark: SparkSession, dir: String,
                     queryName: String = "stream_balance",
-                    maxFilesPerTrigger: Option[Int] = None,
-                    statePartitions: Option[Int] = Some(8)): Dataset[Balance] = {
+                    maxFilesPerTrigger: Option[Int] = None): Dataset[Balance] = {
     import spark.implicits._
     // lead = 1 day + 1 ms past the max event: no real event can expire
     // another user's deadline; the sentinel expires them all
     val leadNs = 86400L * 1000000000L
     val staged = ReplayStage.stageEvents(spark, dir, leadNs + 1000000L)
-    try {
+    val sink = try {
       val evs = ReplayStage.readStream(spark, staged, maxFilesPerTrigger)
         .where("event_type IN ('purchase', 'error') OR event_type IS NULL")
         .selectExpr("user_id", "event_id", "ts DIV 1000 AS o",
@@ -80,16 +79,9 @@ object StreamBalance {
           "timestamp_millis(ts DIV 1000000) AS o_t")
         .withWatermark("o_t", "0 milliseconds")
         .as[Mv]
-      ReplayStage.withStatePartitions(spark, statePartitions) {
-        val q = balances(evs, leadNs / 1000000L)
-          .filter(_.user_id >= 0).writeStream
-          .outputMode("append")
-          .format("memory").queryName(queryName)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      ReplayStage.memorySink(balances(evs, leadNs / 1000000L)
+        .filter(_.user_id >= 0), queryName, "append")
     } finally staged.cleanup()
-    spark.table(queryName).as[Balance]
+    sink.as[Balance]
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming per-day Benford drift monitor — q216's fraud screen run
   * live: leading-digit counts of event values per day window via the
@@ -50,21 +49,13 @@ object StreamBenford {
     * finish shares/deviations batch-side (row-local on the closed
     * (day, digit) rows). */
   def replayParquet(spark: SparkSession, dir: String,
-                    queryName: String = "stream_benford",
-                    statePartitions: Option[Int] = Some(8)): DataFrame = {
+                    queryName: String = "stream_benford"): DataFrame = {
     // complete mode needs no watermark sentinel, but the source read
     // must still handle BOTH events.parquet layouts (single file and
     // directory of part files) — the shared ReplayStage helper does.
-    val stream = ReplayStage.completeModeStream(spark, dir)
-    ReplayStage.withStatePartitions(spark, statePartitions) {
-      val q = dailyDigitCounts(graft.sources.Tables.tsNanosNormalized(stream))
-        .writeStream
-        .outputMode("complete")
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+    ReplayStage.memorySink(dailyDigitCounts(graft.sources.Tables
+      .tsNanosNormalized(ReplayStage.tableStream(spark, dir))),
+      queryName, "complete")
     import spark.implicits._
     // both consumers of the memory sink must mint FRESH attributes
     // (each Alias gets a new exprId) or the day join is a conflicting

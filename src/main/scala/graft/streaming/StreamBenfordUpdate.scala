@@ -23,8 +23,7 @@ object StreamBenfordUpdate {
     * (surviving) day rows. Output per (closed day, digit): x50's
     * schema. */
   def replayParquet(spark: SparkSession, dir: String,
-                    queryName: String = "stream_benford_update",
-                    statePartitions: Option[Int] = Some(8)): DataFrame = {
+                    queryName: String = "stream_benford_update"): DataFrame = {
     val norm = graft.sources.Tables.table(spark, dir, "events")
     val maxTs = norm.agg(max(col("ts"))).head().getLong(0)
     val finalDay = maxTs / DayNs
@@ -32,7 +31,7 @@ object StreamBenfordUpdate {
       expr(s"ts DIV $DayNs") < finalDay
 
     ReplayStage.lateDropReplay(spark, norm, lateRule, maxTs,
-      queryName, statePartitions) { stream =>
+      queryName) { stream =>
       StreamBenford.dailyDigitCounts(stream, delay = "0 milliseconds")
     }
 

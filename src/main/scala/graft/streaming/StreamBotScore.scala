@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming behavioral bot screen — q238's per-user rate/diversity
   * features maintained live. The batch operator was DESIGNED from
@@ -48,19 +47,10 @@ object StreamBotScore {
   /** Replay the events parquet through the streaming feature plan and
     * finish the q238 score row-locally. */
   def replayParquet(spark: SparkSession, dir: String,
-                    queryName: String = "stream_bot",
-                    statePartitions: Option[Int] = Some(8)): DataFrame = {
-    val stream = ReplayStage.completeModeStream(spark, dir)
-    ReplayStage.withStatePartitions(spark, statePartitions) {
-      val q = features(graft.sources.Tables.tsNanosNormalized(stream))
-        .writeStream
-        .outputMode("complete")
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
-    spark.table(queryName)
+                    queryName: String = "stream_bot"): DataFrame = {
+    ReplayStage.memorySink(features(graft.sources.Tables
+      .tsNanosNormalized(ReplayStage.tableStream(spark, dir))),
+      queryName, "complete")
       .select(col("user_id").as("user_id"),
         col("n_events").as("n_events"),
         expr("(_mx - _mn) DIV 1000000000").as("span_s"),

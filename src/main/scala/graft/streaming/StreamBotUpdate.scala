@@ -52,8 +52,7 @@ object StreamBotUpdate {
     * finish the q238 score row-locally. Output per user over the
     * SURVIVING rows: q238's schema. */
   def replayParquet(spark: SparkSession, dir: String,
-                    queryName: String = "stream_bot_update",
-                    statePartitions: Option[Int] = Some(8)): DataFrame = {
+                    queryName: String = "stream_bot_update"): DataFrame = {
     val norm = graft.sources.Tables.table(spark, dir, "events")
     val maxTs = norm.agg(max(col("ts"))).head().getLong(0)
     val finalDay = maxTs / DayNs
@@ -61,7 +60,7 @@ object StreamBotUpdate {
       expr(s"ts DIV $DayNs") < finalDay
 
     ReplayStage.lateDropReplay(spark, norm, lateRule, maxTs,
-      queryName, statePartitions) { stream =>
+      queryName) { stream =>
       dailyFeatures(stream, delay = "0 milliseconds")
     }
 

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming count-min sketch: per-hour CMS counters maintained by the
   * BUILT-IN watermarked windowed aggregation — the frequency member of
@@ -89,25 +88,8 @@ object StreamCms {
     * then estimate batch-side. `complete` mode is the REPLAY-ONLY
     * choice (see class doc). */
   def replayParquet(spark: SparkSession, dir: String,
-                    queryName: String = "stream_cms",
-                    statePartitions: Option[Int] = Some(8)): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n))
-    try {
-      val q = hourlyCounters(graft.sources.Tables.tsNanosNormalized(stream))
-        .writeStream
-        .outputMode("complete")
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    }
-    spark.table(queryName)
-  }
+                    queryName: String = "stream_cms"): DataFrame =
+    ReplayStage.memorySink(hourlyCounters(graft.sources.Tables
+      .tsNanosNormalized(ReplayStage.tableStream(spark, dir))),
+      queryName, "complete")
 }

@@ -23,8 +23,7 @@ object StreamCmsUpdate {
     * (closed hour, probe): x38's schema
     * (bucket_ms, user_id, est_cnt, true_cnt). */
   def replayParquet(spark: SparkSession, dir: String,
-                    queryName: String = "stream_cms_update",
-                    statePartitions: Option[Int] = Some(8)): DataFrame = {
+                    queryName: String = "stream_cms_update"): DataFrame = {
     val norm = graft.sources.Tables.table(spark, dir, "events")
     val maxTs = norm.agg(max(col("ts"))).head().getLong(0)
     val finalDay = maxTs / DayNs
@@ -33,7 +32,7 @@ object StreamCmsUpdate {
       expr(s"ts DIV $DayNs") < finalDay
 
     ReplayStage.lateDropReplay(spark, norm, lateRule, maxTs,
-      queryName, statePartitions) { stream =>
+      queryName) { stream =>
       StreamCms.hourlyCounters(stream, delay = "0 milliseconds")
     }
 

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming CUSUM drift monitor — q226's change-point alarm run live:
   * per-(type, day) value-cent sums via the built-in watermarked
@@ -36,20 +35,11 @@ object StreamCusum {
   /** Replay the events parquet through the streaming counter plan and
     * finish with the batch CUSUM operator over the closed rows. */
   def replayParquet(spark: SparkSession, dir: String,
-                    queryName: String = "stream_cusum",
-                    statePartitions: Option[Int] = Some(8)): DataFrame = {
-    val stream = ReplayStage.completeModeStream(spark, dir)
-    ReplayStage.withStatePartitions(spark, statePartitions) {
-      val q = dailyCents(graft.sources.Tables.tsNanosNormalized(stream))
-        .writeStream
-        .outputMode("complete")
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+                    queryName: String = "stream_cusum"): DataFrame = {
     // fresh attributes off the memory sink (the StreamCms discipline)
-    val daily = spark.table(queryName)
+    val daily = ReplayStage.memorySink(dailyCents(graft.sources.Tables
+        .tsNanosNormalized(ReplayStage.tableStream(spark, dir))),
+        queryName, "complete")
       .select(col("event_type").as("event_type"),
         col("period_ms").as("period_ms"), col("x").as("x"))
     graft.operators.TimeSeries.cusumDaily(daily, "event_type",

@@ -44,8 +44,7 @@ object StreamCusumUpdate {
     * (event_type, period_ms, x, cusum, alarm) — q226's schema over the
     * survivor series. */
   def replayParquet(spark: SparkSession, dir: String,
-                    queryName: String = "stream_cusum_update",
-                    statePartitions: Option[Int] = Some(8)): DataFrame = {
+                    queryName: String = "stream_cusum_update"): DataFrame = {
     val norm = graft.sources.Tables.table(spark, dir, "events")
     val maxTs = norm.agg(max(col("ts"))).head().getLong(0)
     val finalDay = maxTs / DayNs
@@ -55,7 +54,7 @@ object StreamCusumUpdate {
       expr(s"ts DIV $DayNs") < finalDay
 
     ReplayStage.lateDropReplay(spark, norm, lateRule, maxTs,
-      queryName, statePartitions) { stream =>
+      queryName) { stream =>
       dailyCents(stream, delay = "0 milliseconds")
     }
 

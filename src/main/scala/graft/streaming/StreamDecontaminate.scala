@@ -3,7 +3,6 @@ package graft.streaming
 import graft.functions.{HashFns, NativeFns, TextFns}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming benchmark decontamination: every document on the stream is
   * checked for near-duplication against a small REFERENCE set (eval /
@@ -72,9 +71,7 @@ object StreamDecontaminate {
     val bIndex = spark.sparkContext.broadcast(bandIndex)
     val bShingles = spark.sparkContext.broadcast(refShingles)
 
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val stream = ReplayStage.tableStream(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     val verdicts = withSketch(stream, shingleK, params, numBands, rowsPerBand)
       .select(col("doc_id"), col("_sh"), col("_bands"))
@@ -93,12 +90,6 @@ object StreamDecontaminate {
         Verdict(id, hit.map(java.lang.Long.valueOf).orNull)
       }
 
-    val q = verdicts.writeStream
-      .outputMode("append")
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    ReplayStage.memorySink(verdicts, queryName, "append")
   }
 }

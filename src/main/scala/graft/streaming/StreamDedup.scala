@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming exact dedup — the ingest-time arm of the batch dedup
   * suite ([[graft.operators.Dedup.exact]]): keep the first document
@@ -37,29 +36,12 @@ object StreamDedup {
     * (`SELECT DISTINCT text`). Event time is synthesized from doc_id
     * millis so every duplicate falls inside one watermark horizon. */
   def replayParquet(spark: SparkSession, dir: String,
-                    queryName: String = "stream_dedup",
-                    statePartitions: Option[Int] = Some(8)): DataFrame = {
-    val glob = "documents.parquet"
-    val schema = spark.read.parquet(s"$dir/$glob").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob).parquet(dir)
+                    queryName: String = "stream_dedup"): DataFrame = {
+    val stream = ReplayStage.tableStream(spark, dir, "documents")
       // +1 day: the initial watermark is epoch 0, and a row AT the
       // watermark counts as late — doc_id 0 would be silently dropped
       .withColumn("event_time", timestamp_millis(col("doc_id") + lit(86400000L)))
-    // bounded replay, tiny keyed state → few state stores (see
-    // EventStream.replayParquet for the rationale)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(n => spark.conf.set("spark.sql.shuffle.partitions", n))
-    try {
-      val q = firstSeen(stream, "doc_id", "text", "event_time").writeStream
-        .outputMode("append")
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    }
-    spark.table(queryName).select(col("text"))
+    ReplayStage.memorySink(firstSeen(stream, "doc_id", "text", "event_time"),
+      queryName, "append").select(col("text"))
   }
 }

@@ -1,11 +1,10 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import graft.operators.DedupIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** The ingest-dedup LOOP live — the pipeline [[DedupIndex]] exists for,
   * run as a stream: the delta arrives in micro-batches; each batch (1)
@@ -52,7 +51,6 @@ object StreamDeltaDedup {
                     rowsPerBand: Int, seed: Long, tauNum: Int, tauDenom: Int,
                     queryName: String = "stream_delta_dedup",
                     numBatches: Int = 2): DataFrame = {
-    require(numBatches >= 1, s"numBatches=$numBatches")
     val docs = graft.sources.Tables.table(spark, dir, "documents")
       .select(col("doc_id"), col("text"))
     val corpus = docs.where(col("doc_id") % deltaMod =!= 0)
@@ -73,29 +71,9 @@ object StreamDeltaDedup {
     // previous pass in the same JVM must not suppress this run's appends
     ReplayStage.sweepAppendMarkers(idxDir)
 
-    // id-ordered N-part staging: split the id range into equal spans
-    // (two tiny aggregates, no collect of ids) — processing order is
-    // mtime order. For numBatches=2 the single cut lo+(hi−lo)/2 equals
-    // the historical midpoint (lo+hi)/2 (sum and difference share
-    // parity), so the registered 2-batch mirror is byte-identical.
-    val mm = delta.agg(min(col("doc_id")).as("lo"), max(col("doc_id")).as("hi"))
-      .head()
-    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-    val cuts = (1 until numBatches).map(i => lo + (hi - lo) * i / numBatches)
-    val bounds = (Long.MinValue +: cuts) :+ Long.MaxValue
-    val staged = Files.createTempDirectory("graft_ingest_dedup")
-    try {
-      (0 until numBatches).foreach { i =>
-        ReplayStage.writePart(
-          delta.where(col("doc_id") > bounds(i)
-            && col("doc_id") <= bounds(i + 1)),
-          staged, f"$i%02d_day.parquet", (i + 1) * 1000000L)
-      }
-
-      val stream = spark.readStream.schema(delta.schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged.toString)
+    // id-ordered N-part staging: processing order is id order
+    ReplayStage.replayParts(
+        ReplayStage.idRangeParts(delta, "doc_id", numBatches)) { stream =>
       // IDEMPOTENT per-batch side effects: foreachBatch may re-deliver a
       // batch after a failure (and this replay runs on a temp
       // checkpoint, so nothing else dedups retries). The keeper rows go
@@ -105,8 +83,8 @@ object StreamDeltaDedup {
       // sweeps its own previous attempt: a crash between the fold and
       // the marker cannot double-append (the marker is a skip
       // fast-path, not the correctness gate).
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+      ReplayStage.foreachBatch(stream, queryName) {
+        (batch: DataFrame, batchId: Long) =>
           val idx = DedupIndex.load(spark, idxDir, "doc_id")
           // sketch ONCE per batch: the probe and the fold below share
           // the persisted tokenize→shingle→minhash frames instead of
@@ -122,12 +100,8 @@ object StreamDeltaDedup {
           }
           graft.Caches.release() // the probe's per-batch scratch persists
           ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .queryName(queryName)
-        .start()
-      q.awaitTermination()
-    } finally ReplayStage.cleanupStaged(staged)
+      }
+    }
     spark.read.schema("doc_id BIGINT, keep_id BIGINT")
       .option("recursiveFileLookup", "true") // per-batch subdirs
       .parquet(outDir)

@@ -1,11 +1,10 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import graft.operators.DedupIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** The ingest-dedup loop under the EARLIEST-SEEN keeper contract —
   * [[StreamDeltaDedup]] (x57) without its id-ordered-staging caveat.
@@ -140,7 +139,6 @@ object StreamDeltaDedupArrival {
                    rowsPerBand: Int, seed: Long, tauNum: Int, tauDenom: Int,
                    queryName: String, numBatches: Int,
                    compactSeenAfterBatch: Option[Long] = None): DataFrame = {
-    require(numBatches >= 1, s"numBatches=$numBatches")
     val idxDir = s"$stageDir/idx"
     val outDir = s"$stageDir/out_$queryName"
     val seenDir = s"$stageDir/seen_$queryName"
@@ -165,22 +163,10 @@ object StreamDeltaDedupArrival {
       .write.mode("overwrite").partitionBy("_ibkt").parquet(seenDir)
 
     // arrival key: portable hash, deliberately DECORRELATED from ids
-    val arrB = pmod(graft.functions.HashFns.md5Hash60(
-      concat(lit("arr:"), col("doc_id").cast("string"))),
-      lit(numBatches.toLong))
-    val staged = Files.createTempDirectory("graft_ingest_arrival")
-    try {
-      (0 until numBatches).foreach { i =>
-        ReplayStage.writePart(delta.where(arrB === i), staged,
-          f"$i%02d_day.parquet", (i + 1) * 1000000L)
-      }
-
-      val stream = spark.readStream.schema(delta.schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged.toString)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    ReplayStage.replayParts(
+        ReplayStage.arrivalParts(delta, "doc_id", numBatches)) { stream =>
+      ReplayStage.foreachBatch(stream, queryName) {
+        (batch: DataFrame, batchId: Long) =>
           val idx = DedupIndex.load(spark, idxDir, "doc_id")
           // sketch ONCE per batch; probe and fold share it (see
           // StreamDeltaDedup — same shared-sketch pattern)
@@ -224,12 +210,8 @@ object StreamDeltaDedupArrival {
             compactSeen(spark, seenDir, maxFilesPerPartition = 1)
           graft.Caches.release()
           ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .queryName(queryName)
-        .start()
-      q.awaitTermination()
-    } finally ReplayStage.cleanupStaged(staged)
+      }
+    }
     spark.read.schema("doc_id BIGINT, keep_id BIGINT")
       .option("recursiveFileLookup", "true")
       .parquet(outDir)

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful streaming funnel — the incremental twin of the batch
   * exists-chain funnel ([[graft.operators.Funnel.existsChain]], q165):
@@ -129,8 +129,7 @@ object StreamFunnel {
   def replayParquet(spark: SparkSession, dir: String, steps: Seq[String],
                     horizonsNs: Seq[Long],
                     queryName: String = "stream_funnel",
-                    maxFilesPerTrigger: Option[Int] = None,
-                    statePartitions: Option[Int] = Some(8)): Dataset[FunnelRow] = {
+                    maxFilesPerTrigger: Option[Int] = None): Dataset[FunnelRow] = {
     import spark.implicits._
     import org.apache.spark.sql.functions.{max => fmax, min => fmin}
     val batch = graft.sources.Tables.tsNanosNormalized(
@@ -141,7 +140,7 @@ object StreamFunnel {
     // sentinel leads the flush deadline by 1 ms: the ms-floored
     // watermark must pass STRICTLY beyond the last user's deadline
     val staged = ReplayStage.stageEvents(spark, dir, leadNs + 1000000L)
-    try {
+    val sink = try {
       val evs = ReplayStage.readStream(spark, staged, maxFilesPerTrigger)
         .selectExpr("user_id", "event_id", "ts", "event_type",
           "timestamp_millis(ts DIV 1000000) AS ts_t")
@@ -150,15 +149,9 @@ object StreamFunnel {
       // sentinel (user_id = -1, event_type null) is dropped inside
       // funnel's step filter AFTER feeding the watermark — its null
       // event_type matches no step, and its user emits nothing
-      ReplayStage.withStatePartitions(spark, statePartitions) {
-        val q = funnel(evs, steps, horizonsNs, leadNs).writeStream
-          .outputMode("append")
-          .format("memory").queryName(queryName)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      ReplayStage.memorySink(funnel(evs, steps, horizonsNs, leadNs),
+        queryName, "append")
     } finally staged.cleanup()
-    spark.table(queryName).as[FunnelRow]
+    sink.as[FunnelRow]
   }
 }

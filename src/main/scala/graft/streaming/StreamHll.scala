@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming cardinality monitoring: per-hour HyperLogLog registers
   * maintained by the BUILT-IN watermarked windowed aggregation — the
@@ -88,25 +87,8 @@ object StreamHll {
     * stream, which should run [[hourlyRegisters]] in update/append
     * mode against a real sink. */
   def replayParquet(spark: SparkSession, dir: String,
-                    queryName: String = "stream_hll",
-                    statePartitions: Option[Int] = Some(8)): DataFrame = {
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n))
-    try {
-      val q = hourlyRegisters(graft.sources.Tables.tsNanosNormalized(stream))
-        .writeStream
-        .outputMode("complete")
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    }
-    estimates(spark.table(queryName))
-  }
+                    queryName: String = "stream_hll"): DataFrame =
+    estimates(ReplayStage.memorySink(hourlyRegisters(graft.sources.Tables
+      .tsNanosNormalized(ReplayStage.tableStream(spark, dir))),
+      queryName, "complete"))
 }

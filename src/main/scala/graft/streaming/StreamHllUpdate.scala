@@ -24,8 +24,7 @@ object StreamHllUpdate {
     * exact-distinct witness. Output per closed hour: x37's schema
     * (bucket_ms, sum_inv_int, hll_est, est_milli, true_distinct). */
   def replayParquet(spark: SparkSession, dir: String,
-                    queryName: String = "stream_hll_update",
-                    statePartitions: Option[Int] = Some(8)): DataFrame = {
+                    queryName: String = "stream_hll_update"): DataFrame = {
     val norm = graft.sources.Tables.table(spark, dir, "events")
     val maxTs = norm.agg(max(col("ts"))).head().getLong(0)
     val finalDay = maxTs / DayNs
@@ -34,7 +33,7 @@ object StreamHllUpdate {
       expr(s"ts DIV $DayNs") < finalDay
 
     ReplayStage.lateDropReplay(spark, norm, lateRule, maxTs,
-      queryName, statePartitions) { stream =>
+      queryName) { stream =>
       StreamHll.hourlyRegisters(stream, delay = "0 milliseconds")
     }
 

@@ -1,7 +1,7 @@
 package graft.streaming
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful streaming interval coalescing — the incremental twin of the
   * batch [[graft.operators.Intervals]] (q202): per key, merge
@@ -105,13 +105,12 @@ object StreamIntervals {
     * island's max end. */
   def replayParquet(spark: SparkSession, dir: String,
                     queryName: String = "stream_intervals",
-                    maxFilesPerTrigger: Option[Int] = None,
-                    statePartitions: Option[Int] = Some(8)): Dataset[Island] = {
+                    maxFilesPerTrigger: Option[Int] = None): Dataset[Island] = {
     import spark.implicits._
     // lead = the longest possible span (31 min) + 1 ms: the sentinel's
     // START passes every real island's max end strictly
     val staged = ReplayStage.stageEvents(spark, dir, 31L * 60L * 1000000000L)
-    try {
+    val sink = try {
       val evs = ReplayStage.readStream(spark, staged, maxFilesPerTrigger)
         .selectExpr("user_id", "event_id",
           "ts DIV 1000000 AS s",
@@ -119,15 +118,9 @@ object StreamIntervals {
           "timestamp_millis(ts DIV 1000000) AS s_t")
         .withWatermark("s_t", "0 milliseconds")
         .as[Iv]
-      ReplayStage.withStatePartitions(spark, statePartitions) {
-        val q = coalesce(evs).filter(_.user_id >= 0).writeStream
-          .outputMode("append")
-          .format("memory").queryName(queryName)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      ReplayStage.memorySink(coalesce(evs).filter(_.user_id >= 0),
+        queryName, "append")
     } finally staged.cleanup()
-    spark.table(queryName).as[Island]
+    sink.as[Island]
   }
 }

@@ -1,11 +1,8 @@
 package graft.streaming
 
-import java.nio.file.Files
-
 import graft.operators.IvfIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** The ANN serving index's ingest loop live — new vectors arrive in
   * micro-batches and are folded into the persisted [[IvfIndex]] via
@@ -46,36 +43,20 @@ object StreamIvfIngest {
                  numBatches: Int, queryName: String,
                  idCol: String = "vec_id",
                  vecCol: String = "embedding"): Unit = {
-    require(numBatches >= 1, s"numBatches=$numBatches")
     // arrival-hash staging: order-decorrelated from ids on purpose —
     // the appends must not care
-    val arrB = pmod(graft.functions.HashFns.md5Hash60(
-      concat(lit("arr:"), col(idCol).cast("string"))),
-      lit(numBatches.toLong))
-    val staged = Files.createTempDirectory("graft_ivf_ingest")
-    try {
-      (0 until numBatches).foreach { i =>
-        ReplayStage.writePart(delta.where(arrB === i), staged,
-          f"$i%02d_day.parquet", (i + 1) * 1000000L)
-      }
-      val stream = spark.readStream.schema(delta.schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged.toString)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    ReplayStage.replayParts(
+        ReplayStage.arrivalParts(delta, idCol, numBatches)) { stream =>
+      ReplayStage.foreachBatch(stream, queryName) {
+        (batch: DataFrame, batchId: Long) =>
           val idx = IvfIndex.load(spark, idxDir, idCol)
           ReplayStage.foldOncePerBatch(idxDir, batchId) {
             idx.appendTagged(batch, vecCol, idxDir, tag = s"b$batchId")
           }
           graft.Caches.release()
           ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .queryName(queryName)
-        .start()
-      q.awaitTermination()
-    } finally ReplayStage.cleanupStaged(staged)
+      }
+    }
   }
 
   /** Build+save an index on the base corpus under `stageDir/idx`

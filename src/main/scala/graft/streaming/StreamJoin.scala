@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Stream-STREAM interval join — the one canonical Structured-Streaming
   * shape the suite had not yet exercised (the others: windowed agg
@@ -56,12 +55,8 @@ object StreamJoin {
     * the click→purchase delay in whole seconds. */
   private def watermarkedSides(spark: SparkSession, dir: String)
       : (DataFrame, DataFrame) = {
-    val glob = "events.parquet"
-    val schema = spark.read.parquet(s"$dir/$glob").schema
     def side(tpe: String): DataFrame =
-      graft.sources.Tables.tsNanosNormalized(
-          spark.readStream.schema(schema)
-            .option("pathGlobFilter", glob).parquet(dir))
+      graft.sources.Tables.tsNanosNormalized(ReplayStage.tableStream(spark, dir))
         .where(col("event_type") === tpe)
         .withColumn("event_time", timestamp_micros(expr("ts DIV 1000")))
     val clicks = side("click")
@@ -75,30 +70,11 @@ object StreamJoin {
     (clicks, purchases)
   }
 
-  private def replay(spark: SparkSession, joined: DataFrame, queryName: String,
-                     statePartitions: Option[Int]): DataFrame = {
-    // bounded replay, keyed state per user → few state stores (see
-    // EventStream.replayParquet for the rationale)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(n => spark.conf.set("spark.sql.shuffle.partitions", n))
-    try {
-      val q = joined.writeStream
-        .outputMode("append")
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    }
-    spark.table(queryName)
-  }
-
   def replayParquet(spark: SparkSession, dir: String,
-                    queryName: String = "stream_join",
-                    statePartitions: Option[Int] = Some(8)): DataFrame = {
+                    queryName: String = "stream_join"): DataFrame = {
     val (clicks, purchases) = watermarkedSides(spark, dir)
-    replay(spark, clickAttribution(clicks, purchases), queryName, statePartitions)
+    ReplayStage.memorySink(clickAttribution(clicks, purchases), queryName,
+        "append")
       .select(col("click_id"), col("purchase_id"), col("user_id"),
         expr("(unix_micros(purchase_time) - unix_micros(click_time)) DIV 1000000")
           .cast("long").as("delta_s"))
@@ -108,10 +84,10 @@ object StreamJoin {
     * NULLs) so the result stays a clean long column for the oracle's
     * canonicalizer. `matched` is an integer flag. */
   def replayParquetOuter(spark: SparkSession, dir: String,
-                         queryName: String = "stream_join_outer",
-                         statePartitions: Option[Int] = Some(8)): DataFrame = {
+                         queryName: String = "stream_join_outer"): DataFrame = {
     val (clicks, purchases) = watermarkedSides(spark, dir)
-    replay(spark, clickAttributionOuter(clicks, purchases), queryName, statePartitions)
+    ReplayStage.memorySink(clickAttributionOuter(clicks, purchases), queryName,
+        "append")
       .select(col("click_id"), col("user_id"),
         coalesce(col("purchase_id"), lit(-1L)).as("purchase_id"),
         coalesce(

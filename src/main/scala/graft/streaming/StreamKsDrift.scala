@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming per-day KS drift monitor — q220's two-sample test run as a
   * monitor: each day's event-value distribution against the whole
@@ -51,18 +50,10 @@ object StreamKsDrift {
     * and finish the per-day KS batch-side. Output per day:
     * (day_ms, n_day, ks_num, ks_milli). */
   def replayParquet(spark: SparkSession, dir: String,
-                    queryName: String = "stream_ks",
-                    statePartitions: Option[Int] = Some(8)): DataFrame = {
-    val stream = ReplayStage.completeModeStream(spark, dir)
-    ReplayStage.withStatePartitions(spark, statePartitions) {
-      val q = dailyBuckets(graft.sources.Tables.tsNanosNormalized(stream))
-        .writeStream
-        .outputMode("complete")
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+                    queryName: String = "stream_ks"): DataFrame = {
+    ReplayStage.memorySink(dailyBuckets(graft.sources.Tables
+      .tsNanosNormalized(ReplayStage.tableStream(spark, dir))),
+      queryName, "complete")
     // fresh attributes per consumer of the memory sink (the StreamCms
     // discipline: each read mints new exprIds so self-joins resolve)
     def sink(): DataFrame = spark.table(queryName)

@@ -32,8 +32,7 @@ object StreamKsUpdate {
     * (day_ms, n_day, ks_num, ks_milli); `n_day` counts the rows the
     * watermark let through — the oracle's survivor counts must match. */
   def replayParquet(spark: SparkSession, dir: String, refDays: Int = 14,
-                    queryName: String = "stream_ks_update",
-                    statePartitions: Option[Int] = Some(8)): DataFrame = {
+                    queryName: String = "stream_ks_update"): DataFrame = {
     val norm = graft.sources.Tables.table(spark, dir, "events")
     val maxTs = norm.agg(max(col("ts"))).head().getLong(0)
     val finalDay = maxTs / DayNs
@@ -43,7 +42,7 @@ object StreamKsUpdate {
       expr(s"ts DIV $DayNs") < finalDay
 
     ReplayStage.lateDropReplay(spark, norm, lateRule, maxTs,
-      queryName, statePartitions) { stream =>
+      queryName) { stream =>
       StreamKsDrift.dailyBuckets(stream, delay = "0 milliseconds")
     }
 

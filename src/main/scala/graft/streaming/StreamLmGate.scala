@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.functions.TextFns
 import graft.text.NgramLm
@@ -88,17 +87,7 @@ object StreamLmGate {
   def replayParquet(spark: SparkSession, dir: String, tables: LmTables,
                     minAvgScaled: Long,
                     queryName: String = "stream_lm_gate"): DataFrame = {
-    val glob = "documents.parquet"
-    val schema = spark.read.parquet(s"$dir/$glob").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob).parquet(dir)
-    val q = admitted(stream, "doc_id", "text", tables, minAvgScaled)
-      .writeStream
-      .outputMode("append")
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    ReplayStage.memorySink(admitted(ReplayStage.tableStream(spark, dir,
+      "documents"), "doc_id", "text", tables, minAvgScaled), queryName, "append")
   }
 }

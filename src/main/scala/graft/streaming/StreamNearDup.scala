@@ -3,7 +3,7 @@ package graft.streaming
 import graft.functions.{HashFns, NativeFns, TextFns}
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode, Trigger}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Stateful streaming near-duplicate detection against the stream
   * ITSELF: every document is checked against all earlier documents via
@@ -74,15 +74,12 @@ object StreamNearDup {
                     shingleK: Int = 3, numBands: Int = 4, rowsPerBand: Int = 2,
                     tauNum: Int = 1, tauDenom: Int = 2, seed: Long = 42L,
                     maxBucket: Int = Int.MaxValue,
-                    queryName: String = "stream_neardup",
-                    statePartitions: Option[Int] = Some(8)): DataFrame = {
+                    queryName: String = "stream_neardup"): DataFrame = {
     import spark.implicits._
     NativeFns.register(spark)
     val params = HashFns.hashParams(numBands * rowsPerBand, seed)
 
-    val schema = spark.read.parquet(s"$dir/documents.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "documents.parquet").parquet(dir)
+    val stream = ReplayStage.tableStream(spark, dir, "documents")
       .select(col("doc_id"),
         HashFns.wordShingles(TextFns.wordTokens(col("text")), shingleK).as("_sh"))
       .select(col("doc_id"),
@@ -93,24 +90,12 @@ object StreamNearDup {
       .as[(Long, Array[Long], String)]
       .map { case (id, sig, bk) => BandRow(bk, id, sig) }
 
-    val hits = bucketHits(stream, tauNum, tauDenom, maxBucket)
-
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(n => spark.conf.set("spark.sql.shuffle.partitions", n))
-    try {
-      val q = hits.writeStream
-        .outputMode("append")
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    }
+    val hits = ReplayStage.memorySink(
+      bucketHits(stream, tauNum, tauDenom, maxBucket), queryName, "append")
 
     // batch post-pass over the completed replay: min keeper per doc,
     // docs with no hit keep themselves (q39-style keeper contract)
-    val kp = spark.table(queryName)
+    val kp = hits
       .groupBy(col("doc_id")).agg(min(col("keeper")).as("_keep"))
     spark.read.parquet(s"$dir/documents.parquet").select(col("doc_id"))
       .join(kp, Seq("doc_id"), "left")

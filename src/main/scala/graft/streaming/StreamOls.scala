@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming per-window OLS trend — live model fitting on a stream
   * with ZERO custom state: the five OLS sufficient statistics
@@ -49,26 +48,16 @@ object StreamOls {
     * lead) flushes every real day window and contributes no group. */
   def replayParquet(spark: SparkSession, dir: String,
       queryName: String = "stream_ols",
-      maxFilesPerTrigger: Option[Int] = None,
-      statePartitions: Option[Int] = Some(8)): DataFrame = {
+      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val staged = ReplayStage.stageEvents(spark, dir,
       25L * 3600L * 1000000000L)
-    try {
+    val sink = try {
       val evs = ReplayStage.readStream(spark, staged, maxFilesPerTrigger)
-      ReplayStage.withStatePartitions(spark, statePartitions) {
-        val q = dailyStats(evs)
-          .writeStream
-          .outputMode("append")
-          .format("memory").queryName(queryName)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      ReplayStage.memorySink(dailyStats(evs), queryName, "append")
     } finally staged.cleanup()
     val maxDayMs = (staged.maxTsNanos / 86400000000000L) * 86400000L
     graft.operators.Regression.finish(
-        spark.table(queryName)
-          .where(col("day_ms") <= maxDayMs && col("event_type").isNotNull))
+        sink.where(col("day_ms") <= maxDayMs && col("event_type").isNotNull))
       .select(col("day_ms"), col("event_type"), col("n"), col("ok"),
         col("slope_micro"), col("intercept_centi"), col("r2_milli"))
   }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming per-day PSI drift monitor — q233's population stability
   * index as a monitor, and the demonstration that ONE streamed state
@@ -33,19 +32,10 @@ object StreamPsiDrift {
     * catch-all bucket (structurally zero for this self-referential
     * reference; real for [[StreamPsiUpdate]]'s pinned one). */
   def replayParquet(spark: SparkSession, dir: String,
-                    queryName: String = "stream_psi",
-                    statePartitions: Option[Int] = Some(8)): DataFrame = {
-    val stream = ReplayStage.completeModeStream(spark, dir)
-    ReplayStage.withStatePartitions(spark, statePartitions) {
-      val q = StreamKsDrift
-        .dailyBuckets(graft.sources.Tables.tsNanosNormalized(stream))
-        .writeStream
-        .outputMode("complete")
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    }
+                    queryName: String = "stream_psi"): DataFrame = {
+    ReplayStage.memorySink(StreamKsDrift.dailyBuckets(graft.sources.Tables
+      .tsNanosNormalized(ReplayStage.tableStream(spark, dir))),
+      queryName, "complete")
     // null-bucket guard: a NULL b would silently split between the grid
     // pseudo-count and the novel anti-join — fail loudly instead
     def sink(): DataFrame = spark.table(queryName)

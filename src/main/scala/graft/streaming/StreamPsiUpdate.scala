@@ -57,8 +57,7 @@ object StreamPsiUpdate {
     * witness — the oracle's survivor counts must match exactly —
     * and `n_novel` the surviving mass outside the reference support. */
   def replayParquet(spark: SparkSession, dir: String, refDays: Int = 14,
-                    queryName: String = "stream_psi_update",
-                    statePartitions: Option[Int] = Some(8)): DataFrame = {
+                    queryName: String = "stream_psi_update"): DataFrame = {
     val norm = graft.sources.Tables.table(spark, dir, "events")
     val maxTs = norm.agg(max(col("ts"))).head().getLong(0)
     val finalDay = maxTs / DayNs
@@ -71,7 +70,7 @@ object StreamPsiUpdate {
     // asserted watermark drop) — see ReplayStage.lateDropReplay for the
     // micro-batch internals this leans on (gap batch, no-data flush)
     ReplayStage.lateDropReplay(spark, norm, lateRule, maxTs,
-      queryName, statePartitions) { stream =>
+      queryName) { stream =>
       StreamKsDrift.dailyBuckets(stream, delay = "0 milliseconds")
     }
 

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 import graft.functions.TextFns
 
@@ -33,16 +32,7 @@ object StreamQualityGate {
     * so stream ≡ batch row-for-row). */
   def replayParquet(spark: SparkSession, dir: String,
                     queryName: String = "stream_quality"): DataFrame = {
-    val glob = "documents.parquet"
-    val schema = spark.read.parquet(s"$dir/$glob").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", glob).parquet(dir)
-    val q = admitted(stream, "doc_id", "text").writeStream
-      .outputMode("append")
-      .format("memory").queryName(queryName)
-      .trigger(Trigger.AvailableNow())
-      .start()
-    q.awaitTermination()
-    spark.table(queryName)
+    ReplayStage.memorySink(admitted(ReplayStage.tableStream(spark, dir,
+      "documents"), "doc_id", "text"), queryName, "append")
   }
 }

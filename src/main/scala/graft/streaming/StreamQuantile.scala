@@ -3,7 +3,6 @@ package graft.streaming
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming sampled-quantile monitor: per-day bottom-k value samples
   * maintained by the [[graft.functions.BottomKByHash]] aggregate as
@@ -89,26 +88,10 @@ object StreamQuantile {
     * estimate batch-side. `complete` mode is the REPLAY-ONLY choice
     * (see class doc). */
   def replayParquet(spark: SparkSession, dir: String,
-                    queryName: String = "stream_quantile",
-                    statePartitions: Option[Int] = Some(8)): DataFrame = {
+                    queryName: String = "stream_quantile"): DataFrame = {
     graft.functions.NativeFns.register(spark)
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n))
-    try {
-      val q = dailySamples(graft.sources.Tables.tsNanosNormalized(stream))
-        .writeStream
-        .outputMode("complete")
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    }
-    spark.table(queryName)
+    ReplayStage.memorySink(dailySamples(graft.sources.Tables
+      .tsNanosNormalized(ReplayStage.tableStream(spark, dir))),
+      queryName, "complete")
   }
 }

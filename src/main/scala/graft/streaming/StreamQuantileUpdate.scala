@@ -28,8 +28,7 @@ object StreamQuantileUpdate {
     * exact audit. Output per (closed day, pct): x39's schema
     * (bucket_ms, pct, est_v, exact_v, err_milli). */
   def replayParquet(spark: SparkSession, dir: String,
-                    queryName: String = "stream_quantile_update",
-                    statePartitions: Option[Int] = Some(8)): DataFrame = {
+                    queryName: String = "stream_quantile_update"): DataFrame = {
     graft.functions.NativeFns.register(spark)
     val H = graft.functions.HashFns
     val norm = graft.sources.Tables.table(spark, dir, "events")
@@ -39,7 +38,7 @@ object StreamQuantileUpdate {
       expr(s"ts DIV $DayNs") < finalDay
 
     ReplayStage.lateDropReplay(spark, norm, lateRule, maxTs,
-      queryName, statePartitions) { stream =>
+      queryName) { stream =>
       StreamQuantile.dailySamples(
         stream.withColumn("value", coalesce(col("value"), lit(0.0))),
         delay = "0 milliseconds")

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming rolling-window distinct users (DAU/WAU) — the streaming
   * twin of the q190 batch operator, and the suite's demonstration of
@@ -52,27 +51,19 @@ object StreamRollingDistinct {
     * count is touched). */
   def replayParquet(spark: SparkSession, dir: String, windowDays: Int = 7,
       queryName: String = "stream_rolling_distinct",
-      maxFilesPerTrigger: Option[Int] = None,
-      statePartitions: Option[Int] = Some(8)): DataFrame = {
+      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     require(windowDays <= 7, "sentinel lead (9 days) assumes windowDays <= 7")
     val staged = ReplayStage.stageEvents(spark, dir, 9L * 86400L * 1000000000L)
-    try {
+    val sink = try {
       // ReplayStage.readStream guards maxFilesPerTrigger: a multi-batch
       // replay requires time-ordered parts (else the advanced watermark
       // drops later files' early rows) and fails loudly otherwise
       val evs = ReplayStage.readStream(spark, staged, maxFilesPerTrigger)
-      ReplayStage.withStatePartitions(spark, statePartitions) {
-        val q = dailyDistinct(evs, windowDays)
-          .writeStream
-          .outputMode("append")
-          .format("memory").queryName(queryName)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      ReplayStage.memorySink(dailyDistinct(evs, windowDays), queryName,
+        "append")
     } finally staged.cleanup()
     val maxDay = staged.maxTsNanos / 86400000000000L
-    spark.table(queryName)
+    sink
       .where(col("day_ms") <= (maxDay + (windowDays - 1)) * 86400000L)
   }
 }

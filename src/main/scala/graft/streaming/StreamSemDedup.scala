@@ -1,11 +1,10 @@
 package graft.streaming
 
-import java.nio.file.{Files, Paths}
+import java.nio.file.Paths
 
 import graft.operators.SemDedupIndex
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** The SEMANTIC ingest-dedup loop live — [[StreamDeltaDedup]] (x57) for
   * the embedding index: micro-batches of new vectors probe the
@@ -40,7 +39,6 @@ object StreamSemDedup {
                     deltaMod: Int, bits: Int, tau: Double,
                     queryName: String = "stream_sem_dedup",
                     numBatches: Int = 2): DataFrame = {
-    require(numBatches >= 1, s"numBatches=$numBatches")
     val emb = graft.sources.Tables.table(spark, dir, "embeddings")
       .select(col("vec_id"), col("embedding"))
     val corpus = emb.where(col("vec_id") % deltaMod =!= 0)
@@ -58,26 +56,10 @@ object StreamSemDedup {
     ReplayStage.sweepAppendMarkers(idxDir)
 
     // id-ordered N-part staging (the x57 split, see StreamDeltaDedup)
-    val mm = delta.agg(min(col("vec_id")).as("lo"), max(col("vec_id")).as("hi"))
-      .head()
-    val (lo, hi) = (mm.getLong(0), mm.getLong(1))
-    val cuts = (1 until numBatches).map(i => lo + (hi - lo) * i / numBatches)
-    val bounds = (Long.MinValue +: cuts) :+ Long.MaxValue
-    val staged = Files.createTempDirectory("graft_sem_ingest")
-    try {
-      (0 until numBatches).foreach { i =>
-        ReplayStage.writePart(
-          delta.where(col("vec_id") > bounds(i)
-            && col("vec_id") <= bounds(i + 1)),
-          staged, f"$i%02d_day.parquet", (i + 1) * 1000000L)
-      }
-
-      val stream = spark.readStream.schema(delta.schema)
-        .option("pathGlobFilter", "*.parquet")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(staged.toString)
-      val q = stream.writeStream
-        .foreachBatch { (batch: DataFrame, batchId: Long) =>
+    ReplayStage.replayParts(
+        ReplayStage.idRangeParts(delta, "vec_id", numBatches)) { stream =>
+      ReplayStage.foreachBatch(stream, queryName) {
+        (batch: DataFrame, batchId: Long) =>
           val idx = SemDedupIndex.load(spark, idxDir, "vec_id")
           // assign ONCE per batch: the probe and the fold below share
           // the persisted normalize+route frame instead of each
@@ -93,12 +75,8 @@ object StreamSemDedup {
           }
           graft.Caches.release()
           ()
-        }
-        .trigger(Trigger.AvailableNow())
-        .queryName(queryName)
-        .start()
-      q.awaitTermination()
-    } finally ReplayStage.cleanupStaged(staged)
+      }
+    }
     spark.read.schema("vec_id BIGINT, keep_id BIGINT")
       .option("recursiveFileLookup", "true")
       .parquet(outDir)

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Gap-based sessionization via Spark's BUILT-IN `session_window`
   * aggregation — the native merging-window counterpart of the
@@ -47,23 +46,15 @@ object StreamSessionWindow {
     * session's end so append mode emits the complete session set. */
   def replayParquet(spark: SparkSession, dir: String, gapMs: Long,
       queryName: String = "stream_session_window",
-      maxFilesPerTrigger: Option[Int] = None,
-      statePartitions: Option[Int] = Some(8)): DataFrame = {
+      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     val staged = ReplayStage.stageEvents(spark, dir, (gapMs + 1L) * 1000000L)
-    try {
+    val sink = try {
       // ReplayStage.readStream guards maxFilesPerTrigger: a multi-batch
       // replay requires time-ordered parts (else the advanced watermark
       // drops later files' early rows) and fails loudly otherwise
       val evs = ReplayStage.readStream(spark, staged, maxFilesPerTrigger)
-      ReplayStage.withStatePartitions(spark, statePartitions) {
-        val q = sessions(evs, s"$gapMs milliseconds")
-          .writeStream
-          .outputMode("append")
-          .format("memory").queryName(queryName)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      ReplayStage.memorySink(sessions(evs, s"$gapMs milliseconds"),
+        queryName, "append")
     } finally staged.cleanup()
     // The sentinel must be dropped OUTSIDE the streaming query: inside
     // it, a `user_id >= 0` predicate sits on a GROUPING column, so
@@ -72,6 +63,6 @@ object StreamSessionWindow {
     // watermark and every session ending after the last real event is
     // withheld (observed: 25 sessions / 33 events at sf0.01). Filtering
     // the finished memory-sink table is batch-side and push-safe.
-    spark.table(queryName).where(col("user_id") >= 0)
+    sink.where(col("user_id") >= 0)
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming per-window top-k heavy hitters — EXACT ranked output,
   * which Structured Streaming cannot express directly (no window
@@ -65,23 +64,14 @@ object StreamTopK {
     * max ts and is dropped by the bucket cutoff. */
   def replayParquet(spark: SparkSession, dir: String, k: Int = 5,
       queryName: String = "stream_topk",
-      maxFilesPerTrigger: Option[Int] = None,
-      statePartitions: Option[Int] = Some(8)): DataFrame = {
+      maxFilesPerTrigger: Option[Int] = None): DataFrame = {
     graft.functions.NativeFns.register(spark)
     val staged = ReplayStage.stageEvents(spark, dir, 2L * 3600L * 1000000000L)
-    try {
+    val sink = try {
       val evs = ReplayStage.readStream(spark, staged, maxFilesPerTrigger)
-      ReplayStage.withStatePartitions(spark, statePartitions) {
-        val q = hourlyTopK(evs, k)
-          .writeStream
-          .outputMode("append")
-          .format("memory").queryName(queryName)
-          .trigger(Trigger.AvailableNow())
-          .start()
-        q.awaitTermination()
-      }
+      ReplayStage.memorySink(hourlyTopK(evs, k), queryName, "append")
     } finally staged.cleanup()
     val maxHourMs = (staged.maxTsNanos / 3600000000000L) * 3600000L
-    ranked(spark.table(queryName).where(col("bucket_ms") <= maxHourMs))
+    ranked(sink.where(col("bucket_ms") <= maxHourMs))
   }
 }

@@ -2,7 +2,6 @@ package graft.streaming
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
 
 /** Streaming weighted sample without replacement: per-day exact-k
   * Efraimidis–Spirakis (A-ES) selection maintained by the
@@ -86,26 +85,10 @@ object StreamWeightedSample {
   /** Replay the events parquet through the streaming sample plan.
     * `complete` mode is the REPLAY-ONLY choice (see class doc). */
   def replayParquet(spark: SparkSession, dir: String,
-                    queryName: String = "stream_weighted_sample",
-                    statePartitions: Option[Int] = Some(8)): DataFrame = {
+                    queryName: String = "stream_weighted_sample"): DataFrame = {
     graft.functions.NativeFns.register(spark)
-    val schema = spark.read.parquet(s"$dir/events.parquet").schema
-    val stream = spark.readStream.schema(schema)
-      .option("pathGlobFilter", "events.parquet").parquet(dir)
-    val prevShuffle = spark.conf.get("spark.sql.shuffle.partitions")
-    statePartitions.foreach(n =>
-      spark.conf.set("spark.sql.shuffle.partitions", n))
-    try {
-      val q = dailySamples(graft.sources.Tables.tsNanosNormalized(stream))
-        .writeStream
-        .outputMode("complete")
-        .format("memory").queryName(queryName)
-        .trigger(Trigger.AvailableNow())
-        .start()
-      q.awaitTermination()
-    } finally {
-      spark.conf.set("spark.sql.shuffle.partitions", prevShuffle)
-    }
-    spark.table(queryName)
+    ReplayStage.memorySink(dailySamples(graft.sources.Tables
+      .tsNanosNormalized(ReplayStage.tableStream(spark, dir))),
+      queryName, "complete")
   }
 }

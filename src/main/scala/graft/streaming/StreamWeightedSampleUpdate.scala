@@ -25,8 +25,7 @@ object StreamWeightedSampleUpdate {
     * (closed day, selected event): x40's schema
     * (bucket_ms, event_id, wt, ticket). */
   def replayParquet(spark: SparkSession, dir: String,
-                    queryName: String = "stream_wes_update",
-                    statePartitions: Option[Int] = Some(8)): DataFrame = {
+                    queryName: String = "stream_wes_update"): DataFrame = {
     graft.functions.NativeFns.register(spark)
     val norm = graft.sources.Tables.table(spark, dir, "events")
     val maxTs = norm.agg(max(col("ts"))).head().getLong(0)
@@ -35,7 +34,7 @@ object StreamWeightedSampleUpdate {
       expr(s"ts DIV $DayNs") < finalDay
 
     ReplayStage.lateDropReplay(spark, norm, lateRule, maxTs,
-      queryName, statePartitions) { stream =>
+      queryName) { stream =>
       StreamWeightedSample.dailySamples(stream, delay = "0 milliseconds")
     }
 

@@ -5,12 +5,14 @@ import org.apache.spark.sql.functions._
 
 /** Round-20 optimization pins.
   *
-  * 1–3: the per-(dir, generation) meta/router caches in the three index
-  * loaders (one Spark read per saved artifact generation instead of one
-  * per micro-batch) must never serve STALE config — a re-save of the
-  * same dir with different parameters is a new generation and a fresh
-  * read. A stale hit would probe with the wrong hash family / router,
-  * which is exactly the failure the generation key exists to prevent.
+  * 1–3: the per-dir meta/router caches in the three index loaders (one
+  * Spark read per saved artifact generation instead of one per
+  * micro-batch) must never serve STALE config — a re-save of the same
+  * dir with different parameters is a new generation and a fresh read.
+  * A stale hit would probe with the wrong hash family / router, which
+  * is exactly the failure the generation key exists to prevent. The
+  * re-save must also REPLACE the dir's entry: a cache that kept every
+  * generation would grow by one entry per ingest-loop pass.
   *
   * 4: the [[IvfIndex.searchBulk]] join-strategy gate — above the
   * build-row bound the replicated probe side (which carries the wide
@@ -18,6 +20,16 @@ import org.apache.spark.sql.functions._
   * falls back to sort-merge. Join strategy only: the returned rows must
   * be identical. */
 class IndexLoadCacheSpec extends SparkSpec {
+
+  /** After a re-save and reload, `dir` holds exactly one entry, and it
+    * is not the pre-save generation. */
+  private def assertReplaced(generations: Map[String, String], dir: String,
+                             oldGen: String): Unit = {
+    assert(!generations.toSet.contains(dir -> oldGen),
+      s"the pre-save generation of $dir must be evicted, got $generations")
+    assert(generations.contains(dir),
+      s"the reload must cache the new generation of $dir")
+  }
 
   test("DedupIndex.load meta cache: a re-save with different params " +
     "is a fresh read, repeated loads reuse the generation") {
@@ -30,12 +42,14 @@ class IndexLoadCacheSpec extends SparkSpec {
     assert(first.numBands == 4 && first.rowsPerBand == 2)
     assert(DedupIndex.load(spark, dir, "doc_id").meta == first,
       "same generation must round-trip (cache-hit path)")
+    val oldGen = DedupIndex.metaCache.generations(s"$dir/meta")
     DedupIndex.build(docs, "doc_id", "text",
       numBands = 8, rowsPerBand = 4).save(dir)
     val second = DedupIndex.load(spark, dir, "doc_id").meta
     assert(second.numBands == 8 && second.rowsPerBand == 4,
       "a re-save must be a cache MISS — stale meta would probe with " +
         "the wrong hash family")
+    assertReplaced(DedupIndex.metaCache.generations, s"$dir/meta", oldGen)
     graft.Caches.release()
   }
 
@@ -46,9 +60,11 @@ class IndexLoadCacheSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("sem_meta_cache").toString
     SemDedupIndex.buildOrthant(emb, "vec_id", "embedding", bits = 3).save(dir)
     assert(SemDedupIndex.load(spark, dir, "vec_id").meta.orthantBits == 3)
+    val oldGen = SemDedupIndex.metaCache.generations(s"$dir/meta")
     SemDedupIndex.buildOrthant(emb, "vec_id", "embedding", bits = 5).save(dir)
     assert(SemDedupIndex.load(spark, dir, "vec_id").meta.orthantBits == 5,
       "a re-save must be a cache miss")
+    assertReplaced(SemDedupIndex.metaCache.generations, s"$dir/meta", oldGen)
     graft.Caches.release()
   }
 
@@ -59,10 +75,13 @@ class IndexLoadCacheSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ivf_router_cache").toString
     IvfIndex.buildSeeded(emb, "vec_id", "embedding", nlist = 4).save(dir)
     assert(IvfIndex.load(spark, dir, "vec_id").router.centers.length == 4)
+    val routerDir = s"$dir/seeded_router"
+    val oldGen = IvfIndex.routerCache.generations(routerDir)
     IvfIndex.buildSeeded(emb, "vec_id", "embedding", nlist = 8).save(dir)
     assert(IvfIndex.load(spark, dir, "vec_id").router.centers.length == 8,
       "a re-save must be a cache miss — stale centroids would route " +
         "probes against the wrong cell assignment")
+    assertReplaced(IvfIndex.routerCache.generations, routerDir, oldGen)
     graft.Caches.release()
   }
 

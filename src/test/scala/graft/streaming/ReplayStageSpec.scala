@@ -5,16 +5,45 @@ import java.nio.file.{Files, Path}
 import graft.SparkSpec
 import org.apache.spark.sql.SaveMode
 
-/** Staging hygiene and the multi-batch ordering guard: stageEvents
-  * must not leak its sentinel scratch dir, Staged.cleanup must remove
-  * the replay dir, and readStream(maxFilesPerTrigger) must refuse a
-  * part layout whose processing order (oldest mtime first, the file
-  * source's rule) is not time order — or is undefined because mtimes
-  * tie (a 0 ms-watermark multi-batch replay would silently drop the
-  * out-of-order rows as late). */
+/** Staging hygiene, the multi-batch ordering guard and the runner:
+  * stageEvents must not leak its sentinel scratch dir, Staged.cleanup
+  * must remove the replay dir, readStream(maxFilesPerTrigger) must
+  * refuse a part layout whose processing order (oldest mtime first,
+  * the file source's rule) is not time order — or is undefined because
+  * mtimes tie (a 0 ms-watermark multi-batch replay would silently drop
+  * the out-of-order rows as late) — and runToEnd must run every query
+  * on its own state-partition count without leaking it into the
+  * session. */
 class ReplayStageSpec extends SparkSpec {
   import spark.implicits._
   import scala.jdk.CollectionConverters._
+
+  test("runToEnd: stateful plans run on StatePartitions; the session " +
+    "value is restored, also when the plan throws") {
+    val key = "spark.sql.shuffle.partitions"
+    val before = spark.conf.get(key)
+    spark.conf.set(key, "3")
+    try {
+      val counts = ReplayStage.tableStream(spark, sf("sf0.001"))
+        .groupBy($"user_id").count()
+      val q = ReplayStage.runToEnd(counts)(
+        _.outputMode("complete").format("memory").queryName("runner_probe"))
+      assert(q.lastProgress.stateOperators(0).numShufflePartitions ==
+        ReplayStage.StatePartitions)
+      assert(spark.conf.get(key) == "3", "the session value must be restored")
+
+      val e = intercept[org.apache.spark.sql.streaming.StreamingQueryException] {
+        ReplayStage.foreachBatch(
+            ReplayStage.tableStream(spark, sf("sf0.001")), "runner_boom") {
+          (_: org.apache.spark.sql.DataFrame, _: Long) =>
+            throw new IllegalStateException("boom")
+        }
+      }
+      assert(e.getMessage.contains("boom"))
+      assert(spark.conf.get(key) == "3",
+        "the session value must be restored when the query fails")
+    } finally spark.conf.set(key, before)
+  }
 
   /** events.parquet with two named parts: part A covers day-0 events,
     * part B covers day-1 events; `aFirst` controls whether mtime order
