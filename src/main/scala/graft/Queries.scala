@@ -2832,7 +2832,9 @@ object Queries {
     // this query computes them for the corpus's top-8 tokens (df-desc,
     // lexicographic ties) and hash-checks them against DuckDB. The
     // log-sum itself is oracle-checked by q74 (floored per-pair terms);
-    // the production x17 path keeps the 64-bit-mask single-scan plan.
+    // the production x17 path (Coherence.uMass) counts the same numbers
+    // in one scan: per-partition arrays of term and within-topic pair
+    // counts, summed by one treeAggregate.
     q("q63_coherence_counts",
       s"""$coherenceCountsCtes
          |SELECT ri, rj, wi, wj, co, df_j FROM pairct ORDER BY ri, rj""".stripMargin) {

@@ -1,117 +1,100 @@
 package graft.cluster
 
-import graft.functions.ExprUtils
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
+import org.apache.spark.sql.functions.col
 
-/** u_mass topic coherence (SURVEY.md §2.10 X10; reference uses gensim
-  * `CoherenceModel(coherence="u_mass", topn=20)`,
+/** u_mass topic coherence (SURVEY.md §2.10 X10; Mimno et al., EMNLP 2011;
+  * reference uses gensim `CoherenceModel(coherence="u_mass", topn=20)`,
   * `ihop/clustering.py:799-822,1017-1033`).
   *
   * u_mass(topic) = mean over ordered top-term pairs (i later than j) of
   * log((D(w_i, w_j) + 1) / D(w_j)), natural log, where D counts
-  * documents containing the term(s).
+  * documents containing the term(s). Each row is one document, and a
+  * term counts once per row however often it repeats.
   *
-  * Scale shape: the union of top terms is small (topics × topn), so
-  * per-document term presence packs into a 64-bit mask computed in one
-  * scan; documents are then reduced to (mask → count) — at most
-  * min(#docs, 2^|terms|) rows — and every pairwise co-document count
-  * falls out of a driver-side loop over that tiny table. No explode, no
-  * self-join on doc id (the previous form shuffled ~|docs|·|terms|²/2
-  * pair rows). Falls back to the explode+self-join path when the term
-  * union exceeds 64.
+  * Scale shape: one scan and one job for any number of terms. Each
+  * partition keeps an array of per-term document counts and an array of
+  * co-document counts for the pairs that share a topic (at most
+  * topics × topn² / 2, not all pairs of the term union); `treeAggregate`
+  * sums the arrays, and the log-sum runs on the driver.
   */
 object Coherence {
 
-  /** @param tokenized corpus with (docIdCol, tokensCol: array<string>)
+  /** @param tokenized corpus with a `tokensCol: array<string>` column, one
+    *                  document per row
+    * @param docIdCol  the document id column; rows are the documents, so
+    *                  it is not read
     * @param topics    per-topic ordered top terms (most probable first)
     * @return per-topic u_mass scores, aligned with `topics`
     */
   def uMass(tokenized: DataFrame, docIdCol: String, tokensCol: String,
             topics: Seq[Seq[String]]): Seq[Double] = {
-    val allTerms = topics.flatten.distinct
-    if (allTerms.isEmpty) return topics.map(_ => 0.0)
+    val terms = topics.flatten.distinct
+    if (terms.isEmpty) return topics.map(_ => 0.0)
+    val index = terms.zipWithIndex.toMap
+    // one slot per unordered pair of distinct terms that share a topic
+    val slot = topics.flatMap { t =>
+      val ids = t.map(index).distinct
+      for (a <- ids; b <- ids if a < b) yield (a, b)
+    }.distinct.zipWithIndex.toMap
+    // partners(a) = (b, slot) for every slotted pair (a, b), a < b
+    val partners: Array[Array[(Int, Int)]] = {
+      val byTerm = slot.toSeq.groupBy(_._1._1)
+      Array.tabulate(terms.size)(a =>
+        byTerm.getOrElse(a, Nil).map { case ((_, b), s) => (b, s) }.toArray)
+    }
+    val n = terms.size
+    val nPairs = slot.size
 
-    val (docFreq, coFreq) =
-      if (allTerms.size <= 64) maskCounts(tokenized, tokensCol, allTerms)
-      else joinCounts(tokenized, docIdCol, tokensCol, allTerms)
+    val (docFreq, coFreq) = tokenized.select(col(tokensCol)).rdd.mapPartitions { rows =>
+      val df = new Array[Long](n)
+      val co = new Array[Long](nPairs)
+      val seenAt = Array.fill(n)(-1L) // row number a term was last seen at
+      val present = new Array[Int](n)
+      var row = 0L
+      rows.foreach { r =>
+        if (!r.isNullAt(0)) {
+          var m = 0
+          r.getSeq[String](0).foreach { tok =>
+            index.get(tok) match {
+              case Some(i) if seenAt(i) != row => seenAt(i) = row; present(m) = i; m += 1
+              case _ =>
+            }
+          }
+          var p = 0
+          while (p < m) {
+            val a = present(p)
+            df(a) += 1
+            partners(a).foreach { case (b, s) => if (seenAt(b) == row) co(s) += 1 }
+            p += 1
+          }
+        }
+        row += 1
+      }
+      Iterator((df, co))
+    }.treeAggregate((new Array[Long](n), new Array[Long](nPairs)))(addCounts, addCounts)
 
-    def co(a: String, b: String): Long =
-      coFreq.getOrElse(if (a < b) (a, b) else (b, a), 0L)
+    def co(a: String, b: String): Long = {
+      val (i, j) = (index(a), index(b))
+      slot.get(if (i < j) (i, j) else (j, i)).map(coFreq).getOrElse(0L)
+    }
+    def d(t: String): Long = docFreq(index(t))
 
     topics.map { terms =>
       val pairs = for {
         i <- terms.indices; j <- 0 until i
-        if docFreq.getOrElse(terms(j), 0L) > 0
-      } yield math.log((co(terms(i), terms(j)) + 1.0) / docFreq(terms(j)))
+        if d(terms(j)) > 0
+      } yield math.log((co(terms(i), terms(j)) + 1.0) / d(terms(j)))
       if (pairs.isEmpty) 0.0 else pairs.sum / pairs.size
     }
   }
 
-  /** One-scan path: per-doc 64-bit term-presence mask → (mask, count)
-    * table → driver-side pair accumulation. */
-  private def maskCounts(tokenized: DataFrame, tokensCol: String,
-                         terms: Seq[String]): (Map[String, Long], Map[(String, String), Long]) = {
-    val spark = tokenized.sparkSession
-    import spark.implicits._
-    val mask = ExprUtils.bind(col(tokensCol)) { t =>
-      terms.zipWithIndex.map { case (term, i) =>
-        when(array_contains(t, term), lit(1L << i)).otherwise(lit(0L))
-      }.reduce((a, b) => a.bitwiseOR(b))
-    }
-    val maskRows = tokenized.select(mask.as("_m"))
-      .groupBy(col("_m")).agg(count(lit(1)).as("_n"))
-      .as[(Long, Long)].collect()
-
-    val n = terms.size
-    val df0 = new Array[Long](n)
-    val co0 = Array.ofDim[Long](n, n)
-    maskRows.foreach { case (m, cnt) =>
-      var i = 0
-      while (i < n) {
-        if (((m >>> i) & 1L) == 1L) {
-          df0(i) += cnt
-          var j = i + 1
-          while (j < n) {
-            if (((m >>> j) & 1L) == 1L) co0(i)(j) += cnt
-            j += 1
-          }
-        }
-        i += 1
-      }
-    }
-    val docFreq = terms.zipWithIndex.map { case (t, i) => t -> df0(i) }.toMap
-    val coFreq = (for {
-      i <- 0 until n; j <- (i + 1) until n if co0(i)(j) > 0
-      key = if (terms(i) < terms(j)) (terms(i), terms(j)) else (terms(j), terms(i))
-    } yield key -> co0(i)(j)).toMap
-    (docFreq, coFreq)
-  }
-
-  /** Fallback for term unions beyond 64: explode + broadcast-join the
-    * term list, then a doc-id self-join for co-occurrence counts. */
-  private def joinCounts(tokenized: DataFrame, docIdCol: String, tokensCol: String,
-                         terms: Seq[String]): (Map[String, Long], Map[(String, String), Long]) = {
-    val spark = tokenized.sparkSession
-    import spark.implicits._
-    val termsDf = broadcast(terms.toDF("_term"))
-    // persisted: the doc-frequency aggregate and the co-occurrence
-    // self-join (which reads it twice more) are separate actions
-    val occur = tokenized
-      .select(col(docIdCol).as("_doc"), explode(col(tokensCol)).as("_term"))
-      .join(termsDf, Seq("_term"))
-      .distinct()
-      .persist()
-    try {
-      val docFreq = occur.groupBy(col("_term")).agg(count(lit(1)).as("_df"))
-        .as[(String, Long)].collect().toMap
-      val coFreq = occur.as("x").join(occur.as("y"), col("x._doc") === col("y._doc"))
-        .where(col("x._term") < col("y._term"))
-        .groupBy(col("x._term").as("_a"), col("y._term").as("_b"))
-        .agg(count(lit(1)).as("_co"))
-        .as[(String, String, Long)].collect()
-        .map { case (a, b, c) => (a, b) -> c }.toMap
-      (docFreq, coFreq)
-    } finally occur.unpersist(false)
+  private def addCounts(u: (Array[Long], Array[Long]),
+                        v: (Array[Long], Array[Long])): (Array[Long], Array[Long]) = {
+    var i = 0
+    while (i < u._1.length) { u._1(i) += v._1(i); i += 1 }
+    i = 0
+    while (i < u._2.length) { u._2(i) += v._2(i); i += 1 }
+    u
   }
 }

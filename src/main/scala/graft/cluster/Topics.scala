@@ -1,23 +1,42 @@
 package graft.cluster
 
-import org.apache.spark.ml.clustering.{LDA, LDAModel}
+import breeze.linalg.{all, sum, DenseMatrix => BDM, DenseVector => BDV}
+import breeze.numerics.{exp, trigamma}
+import breeze.stats.distributions.{Gamma, RandBasis}
+import org.apache.commons.math3.random.MersenneTwister
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.ml.clustering.{GraftLdaShim, LDAModel, LocalLDAModel}
+import org.apache.spark.ml.param.ParamMap
+import org.apache.spark.mllib.clustering.GraftOnlineLdaShim
+import org.apache.spark.mllib.linalg.{Vector => OldVector}
+import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.storage.StorageLevel
 
 /** LDA topic modeling (SURVEY.md §2.9 M6–M8).
   *
   * Mirrors the reference's Spark LDA setup (`ihop/clustering.py:886-922`):
-  * online optimizer, asymmetric document concentration
-  * alpha_i = 1 / (i + sqrt(k)) (gensim-matching,
-  * `ihop/clustering.py:1108-1140`; the EM optimizer forbids asymmetric
-  * alpha, so online is required), tunable subsampling.
+  * online variational Bayes (Hoffman, Blei & Bach, NIPS 2010) with an
+  * asymmetric document concentration alpha_i = 1 / (i + sqrt(k))
+  * (gensim-matching, `ihop/clustering.py:1108-1140`; the EM optimizer
+  * forbids asymmetric alpha, so online is required), alpha optimized,
+  * tunable subsampling.
+  *
+  * [[fit]] runs the online loop itself and returns exactly what Spark's
+  * `LDA` with the online optimizer returns for the same data and seed:
+  * the same RNG draws, the same mini-batch samples, Spark's own E-step
+  * kernel and the same lambda/alpha updates. Spark's optimizer runs two
+  * jobs per iteration (`isEmpty` on the sample, then the
+  * `treeAggregate`) plus `count()` and `first()` up front; here one
+  * `treeAggregate` per mini-batch also returns the sampled-doc count that
+  * `isEmpty` answered, and one job returns corpus size and vector size.
   */
 object Topics {
 
   final case class Config(
       k: Int = 250,
       maxIter: Int = 50,
-      optimizer: String = "online",
       subsamplingRate: Double = 0.05,
       seed: Long = 42L,
       featuresCol: String = "vectorized")
@@ -26,17 +45,126 @@ object Topics {
   def asymmetricAlpha(k: Int): Array[Double] =
     Array.tabulate(k)(i => 1.0 / (i + math.sqrt(k.toDouble)))
 
-  def fit(df: DataFrame, cfg: Config = Config()): LDAModel = {
-    require(cfg.optimizer == "online",
-      "asymmetric docConcentration requires the online optimizer " +
-        "(reference raises NotImplementedError for em — ihop/clustering.py:915)")
-    new LDA()
-      .setK(cfg.k).setMaxIter(cfg.maxIter).setOptimizer(cfg.optimizer)
-      .setDocConcentration(asymmetricAlpha(cfg.k))
-      .setSubsamplingRate(cfg.subsamplingRate)
-      .setSeed(cfg.seed)
-      .setFeaturesCol(cfg.featuresCol)
-      .fit(df)
+  // Spark's online-optimizer constants: learningOffset (tau0),
+  // learningDecay (kappa) and the Gamma shape of the lambda init and
+  // the E-step
+  private val Tau0 = 1024.0
+  private val Kappa = 0.51
+  private val GammaShape = 100.0
+
+  /** One mini-batch's reduced E-step: topic × term sufficient statistics
+    * and summed E[log theta] over the non-empty sampled documents (null
+    * when there are none), and the sampled-document counts. */
+  private final case class MiniBatch(stats: BDM[Double], logphat: BDV[Double],
+                                     nonEmpty: Long, sampled: Long)
+
+  private def merge(u: MiniBatch, v: MiniBatch): MiniBatch =
+    if (u.stats == null) MiniBatch(v.stats, v.logphat, u.nonEmpty + v.nonEmpty, u.sampled + v.sampled)
+    else {
+      if (v.stats != null) { u.stats += v.stats; u.logphat += v.logphat }
+      MiniBatch(u.stats, u.logphat, u.nonEmpty + v.nonEmpty, u.sampled + v.sampled)
+    }
+
+  /** `java.util.Random` whose next draw can be read without taking it:
+    * Spark draws the E-step seed only after it has seen that the sample
+    * is non-empty, and here both questions go into one job. */
+  private final class PeekableRandom(seed: Long) {
+    private val rng = new java.util.Random(seed)
+    private var peeked: Option[Long] = None
+    def peek(): Long = peeked.getOrElse { val v = rng.nextLong(); peeked = Some(v); v }
+    def next(): Long = { val v = peek(); peeked = None; v }
+  }
+
+  private def eStep(sample: RDD[(Long, OldVector)], expElogbeta: Broadcast[BDM[Double]],
+                    alpha: BDV[Double], k: Int, vocabSize: Int, seed: Long): MiniBatch = {
+    val perPartition = sample.mapPartitionsWithIndex { (index, docs) =>
+      var stats: BDM[Double] = null
+      var logphat: BDV[Double] = null
+      var nonEmpty = 0L
+      var sampled = 0L
+      docs.foreach { case (_, termCounts) =>
+        sampled += 1
+        if (termCounts.numNonzeros > 0) {
+          if (stats == null) { stats = BDM.zeros[Double](k, vocabSize); logphat = BDV.zeros[Double](k) }
+          nonEmpty += 1
+          val (gammad, sstats, ids) = GraftOnlineLdaShim.variationalTopicInference(
+            termCounts, expElogbeta.value, alpha, GammaShape, k, seed + index)
+          stats(::, ids) := stats(::, ids) + sstats
+          logphat += GraftOnlineLdaShim.dirichletExpectation(gammad)
+        }
+      }
+      Iterator(MiniBatch(stats, logphat, nonEmpty, sampled))
+    }
+    // final merge on one executor, as the online optimizer runs it:
+    // partition results merge in partition order, not task-finish order
+    perPartition.treeAggregate(MiniBatch(null, null, 0L, 0L), merge, merge, 2,
+      finalAggregateOnExecutor = true)
+  }
+
+  def fit(df: DataFrame, cfg: Config = Config()): LocalLDAModel = {
+    val k = cfg.k
+    val docs = GraftLdaShim.corpus(df, cfg.featuresCol)
+    // the loop rescans its input every iteration (as Spark's LDA.fit)
+    val ownCache = df.storageLevel == StorageLevel.NONE
+    if (ownCache) docs.persist(StorageLevel.MEMORY_AND_DISK)
+    try {
+      val (corpusSize, vocabSize) = docs.mapPartitions { it =>
+        var n = 0L
+        var size = -1
+        it.foreach { case (_, v) => n += 1; size = v.size }
+        Iterator((n, size))
+      }.reduce((a, b) => (a._1 + b._1, math.max(a._2, b._2)))
+      require(corpusSize > 0, "Topics.fit: empty corpus")
+
+      val rng = new PeekableRandom(cfg.seed)
+      val lambda: BDM[Double] = {
+        val gamma = new Gamma(GammaShape, 1.0 / GammaShape)(
+          new RandBasis(new MersenneTwister(rng.next())))
+        new BDM[Double](vocabSize, k, gamma.sample(k * vocabSize).toArray).t
+      }
+      var alpha = BDV(asymmetricAlpha(k))
+      val eta = 1.0 / k
+      val batchSize = (cfg.subsamplingRate * corpusSize).ceil.toInt
+      var iteration = 0
+      for (_ <- 0 until cfg.maxIter) {
+        val sample = docs.sample(withReplacement = true, cfg.subsamplingRate, rng.next())
+        val expElogbeta = exp(GraftOnlineLdaShim.dirichletExpectation(lambda)).t
+        val expElogbetaBc = df.sparkSession.sparkContext.broadcast(expElogbeta)
+        val batch = try eStep(sample, expElogbetaBc, alpha, k, vocabSize, rng.peek())
+          finally expElogbetaBc.destroy()
+        if (batch.sampled > 0) {
+          rng.next()
+          iteration += 1
+          if (batch.nonEmpty > 0) {
+            val weight = math.pow(Tau0 + iteration, -Kappa)
+            val stat = batch.stats *:* expElogbeta.t
+            lambda := (1 - weight) * lambda +
+              weight * (stat * (corpusSize.toDouble / batchSize.toDouble) + eta)
+            alpha = updateAlpha(alpha, batch.logphat / batch.nonEmpty.toDouble,
+              batch.nonEmpty.toDouble, weight)
+          }
+        }
+      }
+
+      val model = GraftLdaShim.localModel(df, lambda, alpha, eta, GammaShape)
+      model.copy(ParamMap(model.k -> k, model.maxIter -> cfg.maxIter,
+        model.optimizer -> "online", model.docConcentration -> asymmetricAlpha(k),
+        model.subsamplingRate -> cfg.subsamplingRate, model.seed -> cfg.seed,
+        model.featuresCol -> cfg.featuresCol))
+    } finally if (ownCache) docs.unpersist(blocking = false)
+  }
+
+  /** One Newton step on the document concentration (Spark's
+    * `OnlineLDAOptimizer.updateAlpha`); kept only if every entry stays
+    * positive. */
+  private def updateAlpha(alpha: BDV[Double], logphat: BDV[Double], n: Double,
+                          weight: Double): BDV[Double] = {
+    val gradf = n * (-GraftOnlineLdaShim.dirichletExpectation(alpha) + logphat)
+    val c = n * trigamma(sum(alpha))
+    val q = -n * trigamma(alpha)
+    val b = sum(gradf / q) / (1D / c + sum(1D / q))
+    val dalpha = -(gradf - b) / q
+    if (all((weight * dalpha + alpha) >:> 0D)) alpha + weight * dalpha else alpha
   }
 
   /** M7/M8: topics with terms resolved to words — distributed join
@@ -60,8 +188,7 @@ object Topics {
 
   /** S8: model persistence — online LDA yields a LocalLDAModel dir. */
   def save(model: LDAModel, dir: String): Unit = model.write.overwrite().save(dir)
-  def load(dir: String): LDAModel =
-    org.apache.spark.ml.clustering.LocalLDAModel.load(dir)
+  def load(dir: String): LDAModel = LocalLDAModel.load(dir)
 
   /** Per-document (topicId, probability) pairs with prob > threshold
     * (reference `ihop/clustering.py:966-1015`). */

@@ -49,18 +49,21 @@ object Bfs {
       .union(edges.select(col("dst").as("node"), col("src").as("nbr")))
       .persist()
     // Broadcast the frontier semi-join and the settled-set anti-join
-    // build sides when provably small (guide §3.1, the graph-family
-    // gate): the adjacency then streams from its cache each round
-    // instead of re-shuffling. Gated on the ADJACENCY count — every
-    // frame this loop builds (settled set, frontier, candidates) is a
-    // subset of adj's node ids plus the seeds, so adj ≤ the bound
-    // implies they all broadcast; a web-scale adj fails the gate and
-    // the shuffle plan stands. The count is one upfront job that fills
-    // the cache every round reads anyway. Join strategy only.
+    // build sides when provably small (guide §3.1, the Hits/LabelProp/
+    // PageRank gate, same config key and the same meaning: a NODE
+    // count): the adjacency then streams from its cache each round
+    // instead of re-shuffling. Every frame this loop builds (settled
+    // set, frontier, candidates) is a subset of adj's node ids plus the
+    // seeds, so that node count ≤ the bound implies they all broadcast;
+    // a web-scale node set fails the gate and the shuffle plan stands.
+    // The count is one upfront action that fills the cache every round
+    // reads anyway. Join strategy only.
     val bcastMax = spark.conf.getOption("graft.graph.broadcastScoresMaxRows")
       .map(_.toLong).getOrElse(4000000L)
+    val nodes = adj.select(col("node")).union(seeds.select(col("node")))
+      .distinct().count()
     val bc: DataFrame => DataFrame =
-      if (adj.count() <= bcastMax) (df: DataFrame) => broadcast(df)
+      if (nodes <= bcastMax) (df: DataFrame) => broadcast(df)
       else identity[DataFrame]
     val handles = scala.collection.mutable.ListBuffer.empty[DataFrame]
     var (d, dHandle) = matFlat(

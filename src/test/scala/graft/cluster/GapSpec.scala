@@ -43,19 +43,35 @@ class GapSpec extends SparkSpec {
     assert(math.abs(scores(2) - math.log(1.0 / 2)) < 1e-12)
   }
 
-  test("X10 u_mass: >64-term union (self-join fallback) ≡ mask path") {
+  test("X10 u_mass: 70-term union ≡ per-topic calls ≡ brute-force counts") {
     val rnd = new scala.util.Random(3)
     val vocab = (0 until 70).map(i => f"t$i%02d")
-    val corpus = (1L to 50L).map { id =>
+    val docs: Seq[(Long, Seq[String])] = (1L to 50L).map { id =>
       (id, rnd.shuffle(vocab).take(8 + rnd.nextInt(10)).toSeq)
-    }.toDF("doc_id", "tokens")
-    // 10 topics × 7 distinct terms = 70-term union → join fallback
+    } ++ Seq(
+      (51L, Seq("t00", "t01", "t00", "t01", "t00", "t02")), // repeats count once
+      (52L, null))                                          // a document with no tokens
+    val corpus = docs.toDF("doc_id", "tokens")
+    // 10 topics × 7 distinct terms = a 70-term union in one call
     val wideTopics = (0 until 10).map(t => (0 until 7).map(j => vocab(t * 7 + j)))
     val wide = Coherence.uMass(corpus, "doc_id", "tokens", wideTopics)
-    // same corpus, ≤64-term unions scored per-topic through the mask path
+    // same corpus, each topic scored on its own 7-term union
     val narrow = wideTopics.map(tp =>
       Coherence.uMass(corpus, "doc_id", "tokens", Seq(tp)).head)
     wide.zip(narrow).foreach { case (a, b) => assert(math.abs(a - b) < 1e-12) }
+
+    // plain-Scala counts on the collected corpus: a row is a document
+    // and a term counts once per row
+    val rows = corpus.select("tokens").collect()
+      .map(r => Option(r.getSeq[String](0)).map(_.toSet).getOrElse(Set.empty[String]))
+    def d(ts: String*): Long = rows.count(r => ts.forall(r.contains)).toLong
+    val brute = wideTopics.map { t =>
+      val pairs = for {
+        i <- t.indices; j <- 0 until i if d(t(j)) > 0
+      } yield math.log((d(t(i), t(j)) + 1.0) / d(t(j)))
+      pairs.sum / pairs.size
+    }
+    assert(wide == brute)
   }
 
   test("X18 corpus bridges reshape sparse vectors to (index, value)") {
