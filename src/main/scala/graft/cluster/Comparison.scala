@@ -3,6 +3,8 @@ package graft.cluster
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
+import scala.collection.mutable
+
 /** Cluster-comparison mathematics (SURVEY.md §2.10 X11–X15, X19, SO1).
   *
   * The contingency table is a Spark aggregation (the only part that
@@ -27,13 +29,23 @@ object Comparison {
   /** X11: weighted contingency table between two assignment columns.
     * `weight` defaults to 1 per row; the reference's weighted variant
     * adds c1+c2 counts when both sides have counts
-    * (`ihop/clustering.py:96-128`) — pass that sum as `weight`. */
+    * (`ihop/clustering.py:96-128`) — pass that sum as `weight`. One
+    * Spark job (a `treeAggregate` of (a, b) → summed weight); rows with
+    * a null weight are skipped, as `sum` skips them. */
   def contingency(df: DataFrame, aCol: String, bCol: String,
                   weight: Option[String] = None): Contingency = {
-    val w = weight.map(c => sum(col(c))).getOrElse(count(lit(1)).cast("double"))
-    val rows = df.groupBy(col(aCol), col(bCol)).agg(w.cast("double").as("_w"))
-      .collect().map(r => (r.getInt(0), r.getInt(1), r.getDouble(2)))
-    fromTriples(rows.toSeq)
+    val w = weight.map(c => col(c).cast("double")).getOrElse(lit(1.0))
+    val cells = df.select(col(aCol), col(bCol), w).rdd
+      .treeAggregate(mutable.HashMap.empty[(Int, Int), Double])(
+        (m, r) => {
+          if (!r.isNullAt(2)) {
+            val key = (r.getInt(0), r.getInt(1))
+            m(key) = m.getOrElse(key, 0.0) + r.getDouble(2)
+          }
+          m
+        },
+        (a, b) => { b.foreach { case (key, v) => a(key) = a.getOrElse(key, 0.0) + v }; a })
+    fromTriples(cells.toSeq.map { case ((a, b), v) => (a, b, v) })
   }
 
   def fromTriples(triples: Seq[(Int, Int, Double)]): Contingency = {

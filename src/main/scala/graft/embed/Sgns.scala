@@ -258,8 +258,20 @@ object Sgns {
           b.toArray
         }.filter(_.nonEmpty)
       }.persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    val nSentences = sentences.count() // also materializes the cache
+
+    // --- exact global alpha schedule: per-partition sentence counts
+    // give each partition its true global offset (partition-major
+    // order; at numPartitions=1 this is the plain sequential counter).
+    // The count pass also materializes the cache; their sum is the
+    // sentence total. ---
+    val partSentCounts = sentences.rdd
+      .mapPartitionsWithIndex((pid, it) => Iterator((pid, {
+        var c = 0L; while (it.hasNext) { it.next(); c += 1 }; c
+      })))
+      .collect().sortBy(_._1).map(_._2)
+    val nSentences = partSentCounts.sum
     require(nSentences > 0, "Sgns.fit: no non-empty contexts")
+    val partOffsets = exactOffsets(partSentCounts)
 
     val cdf = noiseCdf(counts)
     val keepP = new Array[Double](v)
@@ -285,16 +297,6 @@ object Sgns {
       i += 1
     }
 
-    // --- exact global alpha schedule: per-partition sentence counts
-    // give each partition its true global offset (partition-major
-    // order; at numPartitions=1 this is the plain sequential counter).
-    // One cheap count pass over the already-cached sentence arrays. ---
-    val partSentCounts = sentences.rdd
-      .mapPartitionsWithIndex((pid, it) => Iterator((pid, {
-        var c = 0L; while (it.hasNext) { it.next(); c += 1 }; c
-      })))
-      .collect().sortBy(_._1).map(_._2)
-    val partOffsets = exactOffsets(partSentCounts)
 
     // --- epochs: broadcast weights, local SGD, weighted average -----
     val totalWork = nSentences.toDouble * cfg.epochs

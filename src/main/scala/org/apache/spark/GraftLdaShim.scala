@@ -5,8 +5,10 @@ package org.apache.spark
 // still compute exactly what OnlineLDAOptimizer computes: the same
 // corpus RDD, the same per-document E-step, the same Dirichlet
 // expectation and the same LocalLDAModel at the end. Like
-// org.apache.spark.sql.GraftSqlShim these only forward; the two objects
-// sit in the two packages whose private members they reach.
+// org.apache.spark.sql.GraftSqlShim these only forward; the objects sit
+// in the two packages whose private members they reach.
+// GraftKMeansShim does the same for graft.cluster.Clustering: Spark's
+// KMeans row solver without the estimator's extra jobs.
 package mllib.clustering {
 
   import breeze.linalg.{DenseMatrix => BDM, DenseVector => BDV}
@@ -36,11 +38,13 @@ package mllib.clustering {
 
 package ml.clustering {
 
-  import org.apache.spark.ml.util.Identifiable
-  import org.apache.spark.mllib.clustering.GraftOnlineLdaShim
-  import org.apache.spark.mllib.linalg.{Vector => OldVector}
+  import org.apache.spark.ml.linalg.Vector
+  import org.apache.spark.ml.util.{DatasetUtils, Identifiable}
+  import org.apache.spark.mllib.clustering.{GraftOnlineLdaShim, KMeans => MLlibKMeans}
+  import org.apache.spark.mllib.linalg.{Vector => OldVector, Vectors => OldVectors}
   import org.apache.spark.rdd.RDD
-  import org.apache.spark.sql.Dataset
+  import org.apache.spark.sql.{Dataset, Row}
+  import org.apache.spark.storage.StorageLevel
 
   object GraftLdaShim {
     /** `(docId, term counts)` rows exactly as `LDA.fit` builds them. */
@@ -55,6 +59,28 @@ package ml.clustering {
       val old = GraftOnlineLdaShim.localModel(lambda, alpha, eta, gammaShape)
       new LocalLDAModel(Identifiable.randomUID("lda"), old.vocabSize, old,
         dataset.sparkSession)
+    }
+  }
+
+  object GraftKMeansShim {
+    /** `KMeans.fit` on the row solver, minus two parts that cost Spark
+      * jobs: the auto-solver probe (a `Summarizer` pass) and the training
+      * summary (a `clusterSizes` pass). Instances, solver settings and
+      * persistence are those of `KMeans.trainWithRow`, so the centers
+      * are the ones the estimator computes whenever it picks the row
+      * solver; the model carries the estimator's params and no summary. */
+    def fitRows(est: KMeans, dataset: Dataset[_]): KMeansModel = {
+      est.transformSchema(dataset.schema)
+      val instances = dataset.select(
+        DatasetUtils.checkNonNanVectors(DatasetUtils.columnToVector(dataset, est.getFeaturesCol)),
+        DatasetUtils.checkNonNegativeWeights(est.get(est.weightCol)))
+        .rdd.map { case Row(point: Vector, weight: Double) => (OldVectors.fromML(point), weight) }
+        .setName("training instances")
+      val old = new MLlibKMeans().setK(est.getK).setInitializationMode(est.getInitMode)
+        .setInitializationSteps(est.getInitSteps).setMaxIterations(est.getMaxIter)
+        .setSeed(est.getSeed).setEpsilon(est.getTol).setDistanceMeasure(est.getDistanceMeasure)
+        .runWithWeight(instances, dataset.storageLevel == StorageLevel.NONE, None)
+      new KMeansModel(est.uid, old).copy(est.extractParamMap()).setParent(est)
     }
   }
 }

@@ -134,7 +134,9 @@ class MlSpec extends SparkSpec {
     // hand-derived: W=1.0, B=200, k=2, n=4 → CH=400; DB=1/14.142≈0.0707
     assert(math.abs(m("calinski_harabasz") - 400.0) < 1e-6)
     assert(math.abs(m("davies_bouldin") - 1.0 / math.sqrt(200)) < 1e-9)
-    assert(m("silhouette") > 0.9)
+    // squared-Euclidean silhouette: each point's own-cluster distance is
+    // 1, its nearest other cluster's mean is 210.5 or 190.5
+    assert(math.abs(m("silhouette") - (1 - (1 / 210.5 + 1 / 190.5) / 2)) < 1e-9)
     // single cluster → empty map (reference semantics)
     val one = assigned.withColumn("cluster", lit(0))
     assert(Clustering.metrics(one).isEmpty)
