@@ -2834,7 +2834,7 @@ object Queries {
     // log-sum itself is oracle-checked by q74 (floored per-pair terms);
     // the production x17 path (Coherence.uMass) counts the same numbers
     // in one scan: per-partition arrays of term and within-topic pair
-    // counts, summed by one treeAggregate.
+    // counts, summed in partition order by one PartitionFold job.
     q("q63_coherence_counts",
       s"""$coherenceCountsCtes
          |SELECT ri, rj, wi, wj, co, df_j FROM pairct ORDER BY ri, rj""".stripMargin) {

@@ -1,6 +1,7 @@
 package graft.cluster
 
 import graft.functions.VectorFns
+import graft.util.PartitionFold
 import org.apache.spark.ml.clustering.{GraftKMeansShim, KMeans, KMeansModel}
 import org.apache.spark.ml.functions.array_to_vector
 import org.apache.spark.ml.linalg.Vector
@@ -51,7 +52,8 @@ object Clustering {
     * empty map semantics of the reference (single cluster → {}) is the
     * caller's concern.
     *
-    * Two Spark jobs, each a `treeAggregate` over `(cluster, _features)`:
+    * Two Spark jobs, each a [[graft.util.PartitionFold]] over
+    * `(cluster, _features)`, so partials merge in partition order:
     * the first sums count, features and squared norm per cluster (k,
     * sizes, centroids, global mean); the second, with those broadcast,
     * sums each point's silhouette and the within-cluster Σd² and Σd. The
@@ -62,9 +64,11 @@ object Clustering {
   def metrics(assigned: DataFrame, predictionCol: String = "cluster"): Map[String, Double] = {
     val points = assigned.select(col(predictionCol), col("_features")).rdd
       .map(r => (r.getInt(0), r.getAs[Vector](1).toArray))
-    val sums = points.treeAggregate(mutable.HashMap.empty[Int, ClusterSums])(
-      (m, p) => { m.getOrElseUpdate(p._1, new ClusterSums(p._2.length)).add(p._2); m },
-      (a, b) => { b.foreach { case (c, s) => a.get(c).fold(a(c) = s)(_.merge(s)) }; a })
+    val sums = PartitionFold(points, mutable.HashMap.empty[Int, ClusterSums]) { (_, it) =>
+      val m = mutable.HashMap.empty[Int, ClusterSums]
+      it.foreach(p => m.getOrElseUpdate(p._1, new ClusterSums(p._2.length)).add(p._2))
+      m
+    } { (a, b) => b.foreach { case (c, s) => a.get(c).fold(a(c) = s)(_.merge(s)) }; a }
     val k = sums.size
     if (k <= 1) return Map.empty
 
@@ -77,21 +81,24 @@ object Clustering {
 
     // per point: silhouette, squared distance and distance to its centroid
     val bStats = points.sparkContext.broadcast((ids.zipWithIndex.toMap, stats, centers))
-    val (silSum, w2, dSum) = points.treeAggregate(
-      (0.0, new Array[Double](k), new Array[Double](k)))(
-      (acc, p) => {
-        val (pos, st, ctr) = bStats.value
-        val c = pos(p._1)
-        val x = p._2
+    val (silSum, w2, dSum) = PartitionFold(points,
+        (0.0, new Array[Double](k), new Array[Double](k))) { (_, it) =>
+      val (pos, st, ctr) = bStats.value
+      var sil = 0.0
+      val sq = new Array[Double](k)
+      val dist = new Array[Double](k)
+      it.foreach { case (label, x) =>
+        val c = pos(label)
         val d2 = sqDistArr(x, ctr(c))
-        acc._2(c) += d2
-        acc._3(c) += math.sqrt(d2)
-        (acc._1 + silhouette(x, c, st), acc._2, acc._3)
-      },
-      (a, b) => {
-        var c = 0; while (c < k) { a._2(c) += b._2(c); a._3(c) += b._3(c); c += 1 }
-        (a._1 + b._1, a._2, a._3)
-      })
+        sq(c) += d2
+        dist(c) += math.sqrt(d2)
+        sil += silhouette(x, c, st)
+      }
+      (sil, sq, dist)
+    } { (a, b) =>
+      var c = 0; while (c < k) { a._2(c) += b._2(c); a._3(c) += b._3(c); c += 1 }
+      (a._1 + b._1, a._2, a._3)
+    }
     bStats.destroy()
     val sil = silSum / n
 

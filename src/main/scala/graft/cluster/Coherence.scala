@@ -1,5 +1,6 @@
 package graft.cluster
 
+import graft.util.PartitionFold
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions.col
 
@@ -15,8 +16,9 @@ import org.apache.spark.sql.functions.col
   * Scale shape: one scan and one job for any number of terms. Each
   * partition keeps an array of per-term document counts and an array of
   * co-document counts for the pairs that share a topic (at most
-  * topics × topn² / 2, not all pairs of the term union); `treeAggregate`
-  * sums the arrays, and the log-sum runs on the driver.
+  * topics × topn² / 2, not all pairs of the term union); a
+  * [[graft.util.PartitionFold]] sums the arrays, and the log-sum runs on
+  * the driver.
   */
 object Coherence {
 
@@ -46,7 +48,8 @@ object Coherence {
     val n = terms.size
     val nPairs = slot.size
 
-    val (docFreq, coFreq) = tokenized.select(col(tokensCol)).rdd.mapPartitions { rows =>
+    val (docFreq, coFreq) = PartitionFold(tokenized.select(col(tokensCol)).rdd,
+        (new Array[Long](n), new Array[Long](nPairs))) { (_, rows) =>
       val df = new Array[Long](n)
       val co = new Array[Long](nPairs)
       val seenAt = Array.fill(n)(-1L) // row number a term was last seen at
@@ -71,8 +74,8 @@ object Coherence {
         }
         row += 1
       }
-      Iterator((df, co))
-    }.treeAggregate((new Array[Long](n), new Array[Long](nPairs)))(addCounts, addCounts)
+      (df, co)
+    }(addCounts)
 
     def co(a: String, b: String): Long = {
       val (i, j) = (index(a), index(b))

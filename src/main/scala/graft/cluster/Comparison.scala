@@ -1,5 +1,6 @@
 package graft.cluster
 
+import graft.util.PartitionFold
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -30,21 +31,23 @@ object Comparison {
     * `weight` defaults to 1 per row; the reference's weighted variant
     * adds c1+c2 counts when both sides have counts
     * (`ihop/clustering.py:96-128`) — pass that sum as `weight`. One
-    * Spark job (a `treeAggregate` of (a, b) → summed weight); rows with
-    * a null weight are skipped, as `sum` skips them. */
+    * Spark job (a [[graft.util.PartitionFold]] of (a, b) → summed weight,
+    * merged in partition order); rows with a null weight are skipped, as
+    * `sum` skips them. */
   def contingency(df: DataFrame, aCol: String, bCol: String,
                   weight: Option[String] = None): Contingency = {
     val w = weight.map(c => col(c).cast("double")).getOrElse(lit(1.0))
-    val cells = df.select(col(aCol), col(bCol), w).rdd
-      .treeAggregate(mutable.HashMap.empty[(Int, Int), Double])(
-        (m, r) => {
-          if (!r.isNullAt(2)) {
-            val key = (r.getInt(0), r.getInt(1))
-            m(key) = m.getOrElse(key, 0.0) + r.getDouble(2)
-          }
-          m
-        },
-        (a, b) => { b.foreach { case (key, v) => a(key) = a.getOrElse(key, 0.0) + v }; a })
+    val cells = PartitionFold(df.select(col(aCol), col(bCol), w).rdd,
+        mutable.HashMap.empty[(Int, Int), Double]) { (_, rows) =>
+      val m = mutable.HashMap.empty[(Int, Int), Double]
+      rows.foreach { r =>
+        if (!r.isNullAt(2)) {
+          val key = (r.getInt(0), r.getInt(1))
+          m(key) = m.getOrElse(key, 0.0) + r.getDouble(2)
+        }
+      }
+      m
+    } { (a, b) => b.foreach { case (key, v) => a(key) = a.getOrElse(key, 0.0) + v }; a }
     fromTriples(cells.toSeq.map { case ((a, b), v) => (a, b, v) })
   }
 

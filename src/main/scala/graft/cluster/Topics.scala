@@ -3,6 +3,7 @@ package graft.cluster
 import breeze.linalg.{all, sum, DenseMatrix => BDM, DenseVector => BDV}
 import breeze.numerics.{exp, trigamma}
 import breeze.stats.distributions.{Gamma, RandBasis}
+import graft.util.PartitionFold
 import org.apache.commons.math3.random.MersenneTwister
 import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.ml.clustering.{GraftLdaShim, LDAModel, LocalLDAModel}
@@ -12,7 +13,6 @@ import org.apache.spark.mllib.linalg.{Vector => OldVector}
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** LDA topic modeling (SURVEY.md §2.9 M6–M8).
   *
@@ -26,11 +26,29 @@ import org.apache.spark.storage.StorageLevel
   * [[fit]] runs the online loop itself and returns exactly what Spark's
   * `LDA` with the online optimizer returns for the same data and seed:
   * the same RNG draws, the same mini-batch samples, Spark's own E-step
-  * kernel and the same lambda/alpha updates. Spark's optimizer runs two
-  * jobs per iteration (`isEmpty` on the sample, then the
-  * `treeAggregate`) plus `count()` and `first()` up front; here one
-  * `treeAggregate` per mini-batch also returns the sampled-doc count that
-  * `isEmpty` answered, and one job returns corpus size and vector size.
+  * kernel and the same lambda/alpha updates.
+  *
+  * Job shape: one job for corpus size and vector size, then one job of
+  * one stage per mini-batch at any partition count (Spark's optimizer
+  * runs `count()`, `first()` and, per iteration, `isEmpty` on the sample
+  * plus a `treeAggregate` whose final merge is a second, shuffle stage).
+  * Each mini-batch is a [[graft.util.PartitionFold]]: every partition
+  * returns the statistics of only the terms its sampled documents touch
+  * (so the driver merge is O(k × touched terms) per partition, not
+  * O(k × V)), plus the sampled-document count that `isEmpty` answered,
+  * and the partials are summed in partition order. The fit is
+  * bit-identical to Spark's at one partition and deterministic at any.
+  * Each mini-batch's job is named "Topics.fit mini-batch i/maxIter" in
+  * Spark's logs and listener events.
+  *
+  * Corpus: the fit builds its own `(docId, termCounts)` RDD, as
+  * `LDA.fit` does, persists it and calls `localCheckpoint()` on it,
+  * whether or not the input is cached; the first job fills the blocks
+  * and cuts the lineage, so a mini-batch task ships the sample over the
+  * cached corpus rather than the plan back to the input scan. The blocks
+  * are released when the fit returns. Trade-off: a local checkpoint is
+  * not recomputed, so losing an executor that holds a corpus block fails
+  * the fit instead of re-reading the input.
   */
 object Topics {
 
@@ -52,18 +70,42 @@ object Topics {
   private val Kappa = 0.51
   private val GammaShape = 100.0
 
-  /** One mini-batch's reduced E-step: topic × term sufficient statistics
-    * and summed E[log theta] over the non-empty sampled documents (null
-    * when there are none), and the sampled-document counts. */
-  private final case class MiniBatch(stats: BDM[Double], logphat: BDV[Double],
-                                     nonEmpty: Long, sampled: Long)
+  /** One partition's share of a mini-batch E-step: the sufficient
+    * statistics of the term columns its documents touch (column j of
+    * `stats`, k × `terms.length` column-major, belongs to term
+    * `terms(j)`), summed E[log theta] over its non-empty documents (null
+    * when there are none), and its sampled-document counts. */
+  private final case class Partial(terms: Array[Int], stats: Array[Double], logphat: BDV[Double],
+                                   nonEmpty: Long, sampled: Long)
 
-  private def merge(u: MiniBatch, v: MiniBatch): MiniBatch =
-    if (u.stats == null) MiniBatch(v.stats, v.logphat, u.nonEmpty + v.nonEmpty, u.sampled + v.sampled)
-    else {
-      if (v.stats != null) { u.stats += v.stats; u.logphat += v.logphat }
-      MiniBatch(u.stats, u.logphat, u.nonEmpty + v.nonEmpty, u.sampled + v.sampled)
+  /** A mini-batch's reduced E-step on the driver: dense topic × term
+    * statistics and summed E[log theta] (both null while no non-empty
+    * document has been merged), and the sampled-document counts. */
+  private final class MiniBatch(k: Int, vocabSize: Int) {
+    var stats: BDM[Double] = _
+    var logphat: BDV[Double] = _
+    var nonEmpty = 0L
+    var sampled = 0L
+
+    def add(p: Partial): MiniBatch = {
+      if (p.logphat != null) {
+        if (stats == null) { stats = BDM.zeros[Double](k, vocabSize); logphat = BDV.zeros[Double](k) }
+        val dense = stats.data // column-major, offset 0: term t's column starts at t * k
+        var j = 0
+        while (j < p.terms.length) {
+          val to = p.terms(j) * k
+          val from = j * k
+          var r = 0
+          while (r < k) { dense(to + r) += p.stats(from + r); r += 1 }
+          j += 1
+        }
+        logphat += p.logphat
+      }
+      nonEmpty += p.nonEmpty
+      sampled += p.sampled
+      this
     }
+  }
 
   /** `java.util.Random` whose next draw can be read without taking it:
     * Spark draws the E-step seed only after it has seen that the sample
@@ -75,45 +117,70 @@ object Topics {
     def next(): Long = { val v = peek(); peeked = None; v }
   }
 
-  private def eStep(sample: RDD[(Long, OldVector)], expElogbeta: Broadcast[BDM[Double]],
-                    alpha: BDV[Double], k: Int, vocabSize: Int, seed: Long): MiniBatch = {
-    val perPartition = sample.mapPartitionsWithIndex { (index, docs) =>
-      var stats: BDM[Double] = null
-      var logphat: BDV[Double] = null
-      var nonEmpty = 0L
-      var sampled = 0L
-      docs.foreach { case (_, termCounts) =>
-        sampled += 1
-        if (termCounts.numNonzeros > 0) {
-          if (stats == null) { stats = BDM.zeros[Double](k, vocabSize); logphat = BDV.zeros[Double](k) }
-          nonEmpty += 1
-          val (gammad, sstats, ids) = GraftOnlineLdaShim.variationalTopicInference(
-            termCounts, expElogbeta.value, alpha, GammaShape, k, seed + index)
-          stats(::, ids) := stats(::, ids) + sstats
-          logphat += GraftOnlineLdaShim.dirichletExpectation(gammad)
+  /** Spark's E-step over one partition of the sample, seeded with
+    * `seed + partition index` as the online optimizer seeds it. Each
+    * touched term's column sums its documents' statistics in document
+    * order, as the optimizer's dense per-partition matrix does. */
+  private def eStep(docs: Iterator[(Long, OldVector)], expElogbeta: BDM[Double],
+                    alpha: BDV[Double], k: Int, vocabSize: Int, seed: Long): Partial = {
+    val column = new Array[Int](vocabSize) // 1 + a term's column in `stats`; 0 = untouched
+    var terms = new Array[Int](64)
+    var stats = new Array[Double](64 * k)
+    var touched = 0
+    var logphat: BDV[Double] = null
+    var nonEmpty = 0L
+    var sampled = 0L
+    docs.foreach { case (_, termCounts) =>
+      sampled += 1
+      if (termCounts.numNonzeros > 0) {
+        if (logphat == null) logphat = BDV.zeros[Double](k)
+        nonEmpty += 1
+        val (gammad, sstats, ids) = GraftOnlineLdaShim.variationalTopicInference(
+          termCounts, expElogbeta, alpha, GammaShape, k, seed)
+        var j = 0
+        ids.foreach { t =>
+          if (column(t) == 0) {
+            if (touched == terms.length) {
+              terms = java.util.Arrays.copyOf(terms, 2 * touched)
+              stats = java.util.Arrays.copyOf(stats, 2 * touched * k)
+            }
+            terms(touched) = t
+            touched += 1
+            column(t) = touched
+          }
+          val base = (column(t) - 1) * k
+          var r = 0
+          while (r < k) { stats(base + r) += sstats(r, j); r += 1 }
+          j += 1
         }
+        logphat += GraftOnlineLdaShim.dirichletExpectation(gammad)
       }
-      Iterator(MiniBatch(stats, logphat, nonEmpty, sampled))
     }
-    // final merge on one executor, as the online optimizer runs it:
-    // partition results merge in partition order, not task-finish order
-    perPartition.treeAggregate(MiniBatch(null, null, 0L, 0L), merge, merge, 2,
-      finalAggregateOnExecutor = true)
+    Partial(java.util.Arrays.copyOf(terms, touched), java.util.Arrays.copyOf(stats, touched * k),
+      logphat, nonEmpty, sampled)
   }
+
+  private def miniBatch(sample: RDD[(Long, OldVector)], expElogbeta: Broadcast[BDM[Double]],
+                        alpha: BDV[Double], k: Int, vocabSize: Int, seed: Long): MiniBatch =
+    PartitionFold(sample, new MiniBatch(k, vocabSize)) { (index, docs) =>
+      eStep(docs, expElogbeta.value, alpha, k, vocabSize, seed + index)
+    }(_.add(_))
 
   def fit(df: DataFrame, cfg: Config = Config()): LocalLDAModel = {
     val k = cfg.k
-    val docs = GraftLdaShim.corpus(df, cfg.featuresCol)
-    // the loop rescans its input every iteration (as Spark's LDA.fit)
-    val ownCache = df.storageLevel == StorageLevel.NONE
-    if (ownCache) docs.persist(StorageLevel.MEMORY_AND_DISK)
+    val sc = df.sparkSession.sparkContext
+    // the loop rescans the corpus every iteration (as Spark's LDA.fit);
+    // the checkpoint cuts its lineage at the first job
+    val docs = GraftLdaShim.corpus(df, cfg.featuresCol).localCheckpoint()
     try {
-      val (corpusSize, vocabSize) = docs.mapPartitions { it =>
-        var n = 0L
-        var size = -1
-        it.foreach { case (_, v) => n += 1; size = v.size }
-        Iterator((n, size))
-      }.reduce((a, b) => (a._1 + b._1, math.max(a._2, b._2)))
+      val (corpusSize, vocabSize) = PartitionFold.withCallSite(sc, "Topics.fit corpus size") {
+        PartitionFold(docs, (0L, -1)) { (_, it) =>
+          var n = 0L
+          var size = -1
+          it.foreach { case (_, v) => n += 1; size = v.size }
+          (n, size)
+        }((a, b) => (a._1 + b._1, math.max(a._2, b._2)))
+      }
       require(corpusSize > 0, "Topics.fit: empty corpus")
 
       val rng = new PeekableRandom(cfg.seed)
@@ -126,11 +193,11 @@ object Topics {
       val eta = 1.0 / k
       val batchSize = (cfg.subsamplingRate * corpusSize).ceil.toInt
       var iteration = 0
-      for (_ <- 0 until cfg.maxIter) {
+      for (i <- 1 to cfg.maxIter) PartitionFold.withCallSite(sc, s"Topics.fit mini-batch $i/${cfg.maxIter}") {
         val sample = docs.sample(withReplacement = true, cfg.subsamplingRate, rng.next())
         val expElogbeta = exp(GraftOnlineLdaShim.dirichletExpectation(lambda)).t
-        val expElogbetaBc = df.sparkSession.sparkContext.broadcast(expElogbeta)
-        val batch = try eStep(sample, expElogbetaBc, alpha, k, vocabSize, rng.peek())
+        val expElogbetaBc = sc.broadcast(expElogbeta)
+        val batch = try miniBatch(sample, expElogbetaBc, alpha, k, vocabSize, rng.peek())
           finally expElogbetaBc.destroy()
         if (batch.sampled > 0) {
           rng.next()
@@ -151,7 +218,7 @@ object Topics {
         model.optimizer -> "online", model.docConcentration -> asymmetricAlpha(k),
         model.subsamplingRate -> cfg.subsamplingRate, model.seed -> cfg.seed,
         model.featuresCol -> cfg.featuresCol))
-    } finally if (ownCache) docs.unpersist(blocking = false)
+    } finally docs.unpersist(blocking = false)
   }
 
   /** One Newton step on the document concentration (Spark's

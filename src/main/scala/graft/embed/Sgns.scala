@@ -1,5 +1,6 @@
 package graft.embed
 
+import graft.util.PartitionFold
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -305,98 +306,91 @@ object Sgns {
       val bSyn0 = spark.sparkContext.broadcast(syn0)
       val bSyn1 = spark.sparkContext.broadcast(syn1)
       val doneWork = nSentences.toDouble * epoch
-      val (s0Sum, s1Sum, wSum) = sentences.rdd
-        .mapPartitionsWithIndex { (pid, it) =>
-          val l0 = bSyn0.value.clone()
-          val l1 = bSyn1.value.clone()
-          val lCdf = bCdf.value
-          val lKeep = bKeep.value
-          val rng = new Rng(splitmix64(cfg.seed ^ (epoch.toLong << 32) ^ pid))
-          val lOff = partOffsets(pid).toDouble
-          val neu1e = new Array[Float](dim)
-          var pairs = 0L
-          var sent = 0L
-          it.foreach { s =>
-            // linear alpha decay on EXACT global progress: this
-            // partition's precomputed sentence offset + local position
-            // (partition-major order) — gensim's closed-form schedule,
-            // no equal-partition approximation
-            val alpha = alphaAt(cfg.alpha, cfg.minAlpha,
-              doneWork + lOff + sent.toDouble, totalWork)
-            // subsample once per occurrence (gensim: per-position)
-            val kept = s.filter(w => lKeep(w) >= 1.0 || rng.nextDouble() < lKeep(w))
-            var pos = 0
-            while (pos < kept.length) {
-              val center = kept(pos)
-              // dynamic window (word2vec.c's reduced window b)
-              val b = rng.nextInt(cfg.window)
-              var p2 = math.max(0, pos - cfg.window + b)
-              val end = math.min(kept.length - 1, pos + cfg.window - b)
-              while (p2 <= end) {
-                if (p2 != pos) {
-                  val ctx = kept(p2)
-                  // SGNS pair update: l1 = syn0[ctx] vs center + noise
-                  java.util.Arrays.fill(neu1e, 0.0f)
-                  var t = 0
-                  while (t <= cfg.negative) {
-                    val (target, label) =
-                      if (t == 0) (center, 1.0f)
-                      else {
-                        var nz = sampleNoise(lCdf, rng.nextDouble())
-                        if (nz == center) nz = (nz + 1) % lCdf.length
-                        (nz, 0.0f)
-                      }
-                    var dot = 0.0
-                    var d = 0
-                    while (d < dim) {
-                      dot += l0(ctx * dim + d).toDouble * l1(target * dim + d)
-                      d += 1
+      // the pair-count-weighted sums, merged in partition order
+      val (s0Sum, s1Sum, wSum) = PartitionFold(sentences.rdd,
+          (null: Array[Double], null: Array[Double], 0L)) { (pid, it) =>
+        val l0 = bSyn0.value.clone()
+        val l1 = bSyn1.value.clone()
+        val lCdf = bCdf.value
+        val lKeep = bKeep.value
+        val rng = new Rng(splitmix64(cfg.seed ^ (epoch.toLong << 32) ^ pid))
+        val lOff = partOffsets(pid).toDouble
+        val neu1e = new Array[Float](dim)
+        var pairs = 0L
+        var sent = 0L
+        it.foreach { s =>
+          // linear alpha decay on EXACT global progress: this
+          // partition's precomputed sentence offset + local position
+          // (partition-major order) — gensim's closed-form schedule,
+          // no equal-partition approximation
+          val alpha = alphaAt(cfg.alpha, cfg.minAlpha,
+            doneWork + lOff + sent.toDouble, totalWork)
+          // subsample once per occurrence (gensim: per-position)
+          val kept = s.filter(w => lKeep(w) >= 1.0 || rng.nextDouble() < lKeep(w))
+          var pos = 0
+          while (pos < kept.length) {
+            val center = kept(pos)
+            // dynamic window (word2vec.c's reduced window b)
+            val b = rng.nextInt(cfg.window)
+            var p2 = math.max(0, pos - cfg.window + b)
+            val end = math.min(kept.length - 1, pos + cfg.window - b)
+            while (p2 <= end) {
+              if (p2 != pos) {
+                val ctx = kept(p2)
+                // SGNS pair update: l1 = syn0[ctx] vs center + noise
+                java.util.Arrays.fill(neu1e, 0.0f)
+                var t = 0
+                while (t <= cfg.negative) {
+                  val (target, label) =
+                    if (t == 0) (center, 1.0f)
+                    else {
+                      var nz = sampleNoise(lCdf, rng.nextDouble())
+                      if (nz == center) nz = (nz + 1) % lCdf.length
+                      (nz, 0.0f)
                     }
-                    val g = ((label - sigmoid(dot)) * alpha).toFloat
-                    d = 0
-                    while (d < dim) {
-                      neu1e(d) += g * l1(target * dim + d)
-                      l1(target * dim + d) += g * l0(ctx * dim + d)
-                      d += 1
-                    }
-                    t += 1
-                  }
+                  var dot = 0.0
                   var d = 0
-                  while (d < dim) { l0(ctx * dim + d) += neu1e(d); d += 1 }
-                  pairs += 1
+                  while (d < dim) {
+                    dot += l0(ctx * dim + d).toDouble * l1(target * dim + d)
+                    d += 1
+                  }
+                  val g = ((label - sigmoid(dot)) * alpha).toFloat
+                  d = 0
+                  while (d < dim) {
+                    neu1e(d) += g * l1(target * dim + d)
+                    l1(target * dim + d) += g * l0(ctx * dim + d)
+                    d += 1
+                  }
+                  t += 1
                 }
-                p2 += 1
+                var d = 0
+                while (d < dim) { l0(ctx * dim + d) += neu1e(d); d += 1 }
+                pairs += 1
               }
-              pos += 1
+              p2 += 1
             }
-            sent += 1
+            pos += 1
           }
-          // a partition that trained zero pairs (empty, or everything
-          // subsampled away) must NOT contribute its unchanged
-          // broadcast copy to the average — it would dilute the real
-          // updates at weight 1. Emit nothing instead.
-          if (pairs == 0L) Iterator.empty else Iterator((l0, l1, pairs))
+          sent += 1
         }
-        .treeAggregate((null: Array[Double], null: Array[Double], 0L))(
-          seqOp = { case ((a0, a1, aw), (p0, p1, pw)) =>
-            val o0 = if (a0 == null) new Array[Double](v * dim) else a0
-            val o1 = if (a1 == null) new Array[Double](v * dim) else a1
-            val w = pw.toDouble // pw >= 1: zero-pair partitions emit nothing
-            var j = 0
-            while (j < o0.length) {
-              o0(j) += p0(j) * w; o1(j) += p1(j) * w; j += 1
-            }
-            (o0, o1, aw + pw)
-          },
-          combOp = { case ((a0, a1, aw), (b0, b1, bw)) =>
-            if (a0 == null) (b0, b1, aw + bw)
-            else if (b0 == null) (a0, a1, aw + bw)
-            else {
-              var j = 0
-              while (j < a0.length) { a0(j) += b0(j); a1(j) += b1(j); j += 1 }
-              (a0, a1, aw + bw)
-            }
-          })
+        // a partition that trained zero pairs (empty, or everything
+        // subsampled away) must NOT contribute its unchanged
+        // broadcast copy to the average — it would dilute the real
+        // updates at weight 1. Return no weights instead.
+        if (pairs == 0L) (null, null, 0L) else (l0, l1, pairs)
+      } { case ((a0, a1, aw), (p0, p1, pw)) =>
+        if (p0 == null) (a0, a1, aw)
+        else {
+          val o0 = if (a0 == null) new Array[Double](v * dim) else a0
+          val o1 = if (a1 == null) new Array[Double](v * dim) else a1
+          val w = pw.toDouble
+          var j = 0
+          while (j < o0.length) {
+            o0(j) += p0(j) * w; o1(j) += p1(j) * w; j += 1
+          }
+          (o0, o1, aw + pw)
+        }
+      }
       bSyn0.destroy(); bSyn1.destroy()
       if (wSum > 0L) { // all-zero-pair epoch: keep the previous weights
         val wTot = wSum.toDouble

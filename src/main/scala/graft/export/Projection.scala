@@ -1,6 +1,7 @@
 package graft.export
 
 import graft.functions.{NativeFns, VectorFns}
+import graft.util.PartitionFold
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
@@ -14,7 +15,8 @@ import org.apache.spark.sql.functions._
   * key" contract, not t-SNE's neighborhood structure.
   *
   * Implementation: one distributed pass accumulates (n, Σx, upper
-  * Gramian ΣxxT) via treeAggregate — the same sufficient statistics
+  * Gramian ΣxxT) via [[graft.util.PartitionFold]], merged in partition
+  * order — the same sufficient statistics
   * `RowMatrix.computeCovariance` gathers, without the extra
   * summary/row-count jobs `ml.feature.PCA` schedules around it (ml PCA
   * measured ≥4 framework jobs ≈ 2.3 s warm on a table this engine
@@ -41,33 +43,37 @@ object Projection {
     // sufficient statistics in one pass: (n, Σx, upper-triangular ΣxxT)
     final case class Acc(var n: Long, var s: Array[Double], var g: Array[Double])
     val (n, sums, gram) = {
-      val acc = prepared.select(col("_v")).as[Array[Double]].rdd
-        .treeAggregate(Acc(0L, null, null))(
-          seqOp = (a, x) => {
-            val d = x.length
-            if (a.s == null) { a.s = new Array[Double](d); a.g = new Array[Double](d * d) }
-            require(a.s.length == d, s"pca2d: ragged embedding widths (${a.s.length} vs $d)")
-            var i = 0
-            while (i < d) {
-              val xi = x(i)
-              a.s(i) += xi
-              var j = i
-              while (j < d) { a.g(i * d + j) += xi * x(j); j += 1 }
-              i += 1
-            }
-            a.n += 1; a
-          },
-          combOp = (a, b) => {
-            if (a.s == null) b
-            else if (b.s == null) a
-            else {
-              var i = 0
-              while (i < a.s.length) { a.s(i) += b.s(i); i += 1 }
-              i = 0
-              while (i < a.g.length) { a.g(i) += b.g(i); i += 1 }
-              a.n += b.n; a
-            }
-          })
+      val acc = PartitionFold(prepared.select(col("_v")).as[Array[Double]].rdd,
+          Acc(0L, null, null)) { (_, rows) =>
+        val a = Acc(0L, null, null)
+        rows.foreach { x =>
+          val d = x.length
+          if (a.s == null) { a.s = new Array[Double](d); a.g = new Array[Double](d * d) }
+          require(a.s.length == d, s"pca2d: ragged embedding widths (${a.s.length} vs $d)")
+          var i = 0
+          while (i < d) {
+            val xi = x(i)
+            a.s(i) += xi
+            var j = i
+            while (j < d) { a.g(i * d + j) += xi * x(j); j += 1 }
+            i += 1
+          }
+          a.n += 1
+        }
+        a
+      } { (a, b) =>
+        if (a.s == null) b
+        else if (b.s == null) a
+        else {
+          require(a.s.length == b.s.length,
+            s"pca2d: ragged embedding widths (${a.s.length} vs ${b.s.length})")
+          var i = 0
+          while (i < a.s.length) { a.s(i) += b.s(i); i += 1 }
+          i = 0
+          while (i < a.g.length) { a.g(i) += b.g(i); i += 1 }
+          a.n += b.n; a
+        }
+      }
       require(acc.n >= 2, s"pca2d: need at least 2 rows, got ${acc.n}")
       (acc.n, acc.s, acc.g)
     }

@@ -4,7 +4,9 @@ import graft.SparkSpec
 import graft.text.TextPipeline
 import org.apache.spark.ml.clustering.{LDA, LocalLDAModel}
 import org.apache.spark.ml.linalg.{Vector, Vectors}
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.ListenerBusDrain
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart, SparkListenerStageCompleted,
+  StageInfo}
 import org.apache.spark.sql.DataFrame
 import org.scalatest.concurrent.Eventually
 import org.scalatest.time.SpanSugar._
@@ -121,5 +123,58 @@ class TopicsSpec extends SparkSpec with Eventually {
       spark.sparkContext.removeSparkListener(listener)
       df.unpersist()
     }
+  }
+
+  /** Job count and completed stages of the Spark work `body` runs. */
+  private def recordJobs(body: => Unit): (Int, Seq[StageInfo]) = {
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val stages = new java.util.concurrent.ConcurrentLinkedQueue[StageInfo]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      override def onStageCompleted(e: SparkListenerStageCompleted): Unit = stages.add(e.stageInfo)
+    }
+    ListenerBusDrain.drain(spark.sparkContext)
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      body
+      ListenerBusDrain.drain(spark.sparkContext)
+    } finally spark.sparkContext.removeSparkListener(listener)
+    (jobs.get(), stages.toArray(Array.empty[StageInfo]).toSeq)
+  }
+
+  test("fit at 2 partitions runs one single-stage job per mini-batch") {
+    val df = corpus(2).cache()
+    df.count()
+    try {
+      val (jobs, stages) = recordJobs(Topics.fit(df, Topics.Config(k = 3, maxIter = 12)))
+      assert(jobs == 13)
+      assert(stages.size == 13)
+      assert(stages.map(_.name).filter(_.startsWith("Topics.fit mini-batch")) ==
+        (1 to 12).map(i => s"Topics.fit mini-batch $i/12"))
+    } finally df.unpersist()
+  }
+
+  test("mini-batch stages read the checkpointed corpus, not the parquet scan") {
+    val dir = java.nio.file.Files.createTempDirectory("lda-input").toString + "/docs"
+    corpus(2).write.parquet(dir)
+    val df = spark.read.parquet(dir)
+    val (_, stages) = recordJobs(Topics.fit(df, Topics.Config(k = 3, maxIter = 6)))
+    def rdds(s: StageInfo) = s.rddInfos.map(r => s"${r.name} @ ${r.callSite}")
+    val sqlRdd = (r: String) => Seq("FileScan", "SQLExecution", "WholeStageCodegen", "parquet")
+      .exists(r.contains)
+    // the corpus-size job computes the corpus from the scan
+    assert(stages.filter(_.name == "Topics.fit corpus size").flatMap(rdds).exists(sqlRdd))
+    val miniBatches = stages.filter(_.name.startsWith("Topics.fit mini-batch"))
+    assert(miniBatches.size == 6)
+    miniBatches.foreach(s => assert(!rdds(s).exists(sqlRdd), rdds(s).mkString("; ")))
+  }
+
+  test("two fits at 3 partitions are bit-identical") {
+    val df = corpus(3)
+    val cfg = Topics.Config(k = 3, maxIter = 30)
+    val a = Topics.fit(df, cfg)
+    val b = Topics.fit(df, cfg)
+    assert(a.topicsMatrix.toArray.sameElements(b.topicsMatrix.toArray))
+    assert(a.estimatedDocConcentration.toArray.sameElements(b.estimatedDocConcentration.toArray))
   }
 }

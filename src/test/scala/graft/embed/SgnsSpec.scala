@@ -87,6 +87,14 @@ class SgnsSpec extends SparkSpec {
     assert(m1.syn0.toSeq != m3.syn0.toSeq, "different seed, different weights")
   }
 
+  test("two fits at 3 partitions give the same embedding") {
+    val cfg = fastCfg.copy(numPartitions = 3)
+    val a = Sgns.fit(df(60), cfg)
+    val b = Sgns.fit(df(60), cfg)
+    assert(a.words.sameElements(b.words))
+    assert(a.syn0.sameElements(b.syn0))
+  }
+
   test("fit is independent of input partitioning") {
     val d1 = df(40).repartition(7)
     val d2 = df(40).coalesce(1)
