@@ -33,11 +33,11 @@ import org.apache.spark.sql.functions._
   * runs `count()`, `first()` and, per iteration, `isEmpty` on the sample
   * plus a `treeAggregate` whose final merge is a second, shuffle stage).
   * Each mini-batch is a [[graft.util.PartitionFold]]: every partition
-  * returns the statistics of only the terms its sampled documents touch
-  * (so the driver merge is O(k × touched terms) per partition, not
-  * O(k × V)), plus the sampled-document count that `isEmpty` answered,
-  * and the partials are summed in partition order. The fit is
-  * bit-identical to Spark's at one partition and deterministic at any.
+  * returns its k × V statistics, summed E[log theta] and the
+  * sampled-document count that `isEmpty` answered, and the driver sums
+  * the partials in partition order, so it holds one k × V matrix per
+  * partition while a mini-batch runs. The fit is bit-identical to
+  * Spark's at one partition and deterministic at any.
   * Each mini-batch's job is named "Topics.fit mini-batch i/maxIter" in
   * Spark's logs and listener events.
   *
@@ -70,42 +70,18 @@ object Topics {
   private val Kappa = 0.51
   private val GammaShape = 100.0
 
-  /** One partition's share of a mini-batch E-step: the sufficient
-    * statistics of the term columns its documents touch (column j of
-    * `stats`, k × `terms.length` column-major, belongs to term
-    * `terms(j)`), summed E[log theta] over its non-empty documents (null
-    * when there are none), and its sampled-document counts. */
-  private final case class Partial(terms: Array[Int], stats: Array[Double], logphat: BDV[Double],
-                                   nonEmpty: Long, sampled: Long)
+  /** One mini-batch's reduced E-step: topic × term sufficient statistics
+    * and summed E[log theta] over the non-empty sampled documents (null
+    * when there are none), and the sampled-document counts. */
+  private final case class MiniBatch(stats: BDM[Double], logphat: BDV[Double],
+                                     nonEmpty: Long, sampled: Long)
 
-  /** A mini-batch's reduced E-step on the driver: dense topic × term
-    * statistics and summed E[log theta] (both null while no non-empty
-    * document has been merged), and the sampled-document counts. */
-  private final class MiniBatch(k: Int, vocabSize: Int) {
-    var stats: BDM[Double] = _
-    var logphat: BDV[Double] = _
-    var nonEmpty = 0L
-    var sampled = 0L
-
-    def add(p: Partial): MiniBatch = {
-      if (p.logphat != null) {
-        if (stats == null) { stats = BDM.zeros[Double](k, vocabSize); logphat = BDV.zeros[Double](k) }
-        val dense = stats.data // column-major, offset 0: term t's column starts at t * k
-        var j = 0
-        while (j < p.terms.length) {
-          val to = p.terms(j) * k
-          val from = j * k
-          var r = 0
-          while (r < k) { dense(to + r) += p.stats(from + r); r += 1 }
-          j += 1
-        }
-        logphat += p.logphat
-      }
-      nonEmpty += p.nonEmpty
-      sampled += p.sampled
-      this
+  private def merge(u: MiniBatch, v: MiniBatch): MiniBatch =
+    if (u.stats == null) MiniBatch(v.stats, v.logphat, u.nonEmpty + v.nonEmpty, u.sampled + v.sampled)
+    else {
+      if (v.stats != null) { u.stats += v.stats; u.logphat += v.logphat }
+      MiniBatch(u.stats, u.logphat, u.nonEmpty + v.nonEmpty, u.sampled + v.sampled)
     }
-  }
 
   /** `java.util.Random` whose next draw can be read without taking it:
     * Spark draws the E-step seed only after it has seen that the sample
@@ -117,54 +93,28 @@ object Topics {
     def next(): Long = { val v = peek(); peeked = None; v }
   }
 
-  /** Spark's E-step over one partition of the sample, seeded with
-    * `seed + partition index` as the online optimizer seeds it. Each
-    * touched term's column sums its documents' statistics in document
-    * order, as the optimizer's dense per-partition matrix does. */
-  private def eStep(docs: Iterator[(Long, OldVector)], expElogbeta: BDM[Double],
-                    alpha: BDV[Double], k: Int, vocabSize: Int, seed: Long): Partial = {
-    val column = new Array[Int](vocabSize) // 1 + a term's column in `stats`; 0 = untouched
-    var terms = new Array[Int](64)
-    var stats = new Array[Double](64 * k)
-    var touched = 0
-    var logphat: BDV[Double] = null
-    var nonEmpty = 0L
-    var sampled = 0L
-    docs.foreach { case (_, termCounts) =>
-      sampled += 1
-      if (termCounts.numNonzeros > 0) {
-        if (logphat == null) logphat = BDV.zeros[Double](k)
-        nonEmpty += 1
-        val (gammad, sstats, ids) = GraftOnlineLdaShim.variationalTopicInference(
-          termCounts, expElogbeta, alpha, GammaShape, k, seed)
-        var j = 0
-        ids.foreach { t =>
-          if (column(t) == 0) {
-            if (touched == terms.length) {
-              terms = java.util.Arrays.copyOf(terms, 2 * touched)
-              stats = java.util.Arrays.copyOf(stats, 2 * touched * k)
-            }
-            terms(touched) = t
-            touched += 1
-            column(t) = touched
-          }
-          val base = (column(t) - 1) * k
-          var r = 0
-          while (r < k) { stats(base + r) += sstats(r, j); r += 1 }
-          j += 1
+  /** Spark's E-step over the sample, each partition seeded with
+    * `seed + partition index` as the online optimizer seeds it. */
+  private def eStep(sample: RDD[(Long, OldVector)], expElogbeta: Broadcast[BDM[Double]],
+                    alpha: BDV[Double], k: Int, vocabSize: Int, seed: Long): MiniBatch =
+    PartitionFold(sample, MiniBatch(null, null, 0L, 0L)) { (index, docs) =>
+      var stats: BDM[Double] = null
+      var logphat: BDV[Double] = null
+      var nonEmpty = 0L
+      var sampled = 0L
+      docs.foreach { case (_, termCounts) =>
+        sampled += 1
+        if (termCounts.numNonzeros > 0) {
+          if (stats == null) { stats = BDM.zeros[Double](k, vocabSize); logphat = BDV.zeros[Double](k) }
+          nonEmpty += 1
+          val (gammad, sstats, ids) = GraftOnlineLdaShim.variationalTopicInference(
+            termCounts, expElogbeta.value, alpha, GammaShape, k, seed + index)
+          stats(::, ids) := stats(::, ids) + sstats
+          logphat += GraftOnlineLdaShim.dirichletExpectation(gammad)
         }
-        logphat += GraftOnlineLdaShim.dirichletExpectation(gammad)
       }
-    }
-    Partial(java.util.Arrays.copyOf(terms, touched), java.util.Arrays.copyOf(stats, touched * k),
-      logphat, nonEmpty, sampled)
-  }
-
-  private def miniBatch(sample: RDD[(Long, OldVector)], expElogbeta: Broadcast[BDM[Double]],
-                        alpha: BDV[Double], k: Int, vocabSize: Int, seed: Long): MiniBatch =
-    PartitionFold(sample, new MiniBatch(k, vocabSize)) { (index, docs) =>
-      eStep(docs, expElogbeta.value, alpha, k, vocabSize, seed + index)
-    }(_.add(_))
+      MiniBatch(stats, logphat, nonEmpty, sampled)
+    }(merge)
 
   def fit(df: DataFrame, cfg: Config = Config()): LocalLDAModel = {
     val k = cfg.k
@@ -197,7 +147,7 @@ object Topics {
         val sample = docs.sample(withReplacement = true, cfg.subsamplingRate, rng.next())
         val expElogbeta = exp(GraftOnlineLdaShim.dirichletExpectation(lambda)).t
         val expElogbetaBc = sc.broadcast(expElogbeta)
-        val batch = try miniBatch(sample, expElogbetaBc, alpha, k, vocabSize, rng.peek())
+        val batch = try eStep(sample, expElogbetaBc, alpha, k, vocabSize, rng.peek())
           finally expElogbetaBc.destroy()
         if (batch.sampled > 0) {
           rng.next()

@@ -25,7 +25,12 @@ import org.apache.spark.sql.functions._
   * the reference's own gensim training (whose model is equally
   * single-node); the corpus itself never leaves executors. A loud
   * `MaxSynapses` guard rejects vocabularies that would not fit the
-  * driver, the Tsne/AffinityPropagation convention.
+  * driver, the Tsne/AffinityPropagation convention. The per-epoch merge
+  * is a [[graft.util.PartitionFold]]: every partition that trained a
+  * pair sends its 2 × vocab × dim weights to the driver, which holds
+  * them all until the epoch's job ends. So driver heap and
+  * `spark.driver.maxResultSize` grow with numPartitions, which the
+  * guard does not count.
   *
   * Determinism: vocab order is (count desc, word asc); per-partition
   * RNG is splitmix64 seeded by (seed, epoch, partition); partition

@@ -1,21 +1,24 @@
 package graft.util
 
-import org.apache.spark.{SparkContext, TaskContext}
+import org.apache.spark.{GraftCallSiteShim, SparkContext, TaskContext}
 import org.apache.spark.rdd.RDD
 
 import scala.reflect.ClassTag
 
 /** One Spark job that computes one partial per partition and folds the
-  * partials on the driver in partition order.
+  * partials on the driver in partition order:
+  * `merge(…merge(merge(zero, p0), p1)…, pn−1)`.
   *
   * `treeAggregate` and `fold` merge their last partials in the order the
   * tasks finish, so at three or more partitions a floating-point sum can
   * differ from run to run; above one partition `treeAggregate` with
   * `finalAggregateOnExecutor` also adds a shuffle stage. Here the job
-  * has one stage, and partial `i` is folded as soon as partials
-  * `0 … i−1` have been: `merge(…merge(merge(zero, p0), p1)…, pn−1)`,
-  * whatever order the tasks finish in. A partial waits on the driver
-  * only while an earlier partition is still running.
+  * has one stage, and the result does not depend on task-finish order.
+  *
+  * Every partial is sent to the driver and held there until the job
+  * ends, so the driver holds `n` partials at once: `n × size(P)` of
+  * heap, within `spark.driver.maxResultSize`. Keep partials small, or
+  * the partition count low, where a partial is large.
   *
   * The per-partition function goes to `SparkContext.runJob` inside a
   * named function class, so Spark's closure cleaner finds no lambda to
@@ -24,37 +27,16 @@ import scala.reflect.ClassTag
   * call). Skipping the cleaner also skips its early serializability
   * check: a non-serializable capture still fails the call, with the
   * `SparkException` Spark raises when it serializes the task, which
-  * names the class.
-  *
-  * `merge` runs on the driver while the job runs; if it throws, later
-  * partials are dropped and the exception is rethrown once the job
-  * ends. An RDD with no partitions runs no job and returns `zero`.
+  * names the class. An RDD with no partitions runs no job and returns
+  * `zero`.
   */
 object PartitionFold {
 
   def apply[T, P: ClassTag, R](rdd: RDD[T], zero: R)(partial: (Int, Iterator[T]) => P)(
       merge: (R, P) => R): R = {
     val n = rdd.partitions.length
-    if (n == 0) return zero
-    val arrived = new Array[Boolean](n)
-    val pending = new Array[Any](n)
-    var next = 0
-    var acc = zero
-    var failure: Throwable = null
-    rdd.sparkContext.runJob(rdd, new PartitionTask(partial), 0 until n, (i: Int, p: P) => {
-      arrived(i) = true
-      pending(i) = p
-      while (next < n && arrived(next)) {
-        if (failure == null) {
-          try acc = merge(acc, pending(next).asInstanceOf[P])
-          catch { case e: Throwable => failure = e }
-        }
-        pending(next) = null
-        next += 1
-      }
-    })
-    if (failure != null) throw failure
-    acc
+    if (n == 0) zero
+    else rdd.sparkContext.runJob(rdd, new PartitionTask(partial), 0 until n).foldLeft(zero)(merge)
   }
 
   /** Runs `body` with the short and the long call site both set to
@@ -62,6 +44,7 @@ object PartitionFold {
     * listener events, and Spark skips its per-job stack walk. The
     * caller's call site is restored afterwards. */
   def withCallSite[A](sc: SparkContext, label: String)(body: => A): A = {
+    import GraftCallSiteShim.{LongForm, ShortForm}
     val short = sc.getLocalProperty(ShortForm)
     val long = sc.getLocalProperty(LongForm)
     sc.setLocalProperty(ShortForm, label)
@@ -72,10 +55,6 @@ object PartitionFold {
       sc.setLocalProperty(LongForm, long)
     }
   }
-
-  // the local-property keys SparkContext.setCallSite writes
-  private val ShortForm = "callSite.short"
-  private val LongForm = "callSite.long"
 
   private final class PartitionTask[T, P](partial: (Int, Iterator[T]) => P)
       extends ((TaskContext, Iterator[T]) => P) with Serializable {

@@ -1,7 +1,7 @@
 package graft.util
 
 import graft.SparkSpec
-import org.apache.spark.{ListenerBusDrain, SparkException}
+import org.apache.spark.{GraftCallSiteShim, ListenerBusDrain, SparkException}
 import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart,
   SparkListenerStageSubmitted, SparkListenerTaskEnd}
 
@@ -92,8 +92,8 @@ class PartitionFoldSpec extends SparkSpec {
       PartitionFold.withCallSite(sc, "fold under test") {
         PartitionFold(sc.parallelize(1 to 10, 2), 0)((_, it) => it.sum)(_ + _)
       }
-      assert(sc.getLocalProperty("callSite.short") == "caller")
-      assert(sc.getLocalProperty("callSite.long") == null)
+      assert(sc.getLocalProperty(GraftCallSiteShim.ShortForm) == "caller")
+      assert(sc.getLocalProperty(GraftCallSiteShim.LongForm) == null)
       ListenerBusDrain.drain(sc)
       assert(names.toArray.toSeq == Seq("fold under test"))
     } finally {
