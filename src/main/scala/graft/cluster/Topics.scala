@@ -42,11 +42,11 @@ import org.apache.spark.sql.functions._
   * Spark's logs and listener events.
   *
   * Corpus: the fit builds its own `(docId, termCounts)` RDD, as
-  * `LDA.fit` does, persists it and calls `localCheckpoint()` on it,
-  * whether or not the input is cached; the first job fills the blocks
-  * and cuts the lineage, so a mini-batch task ships the sample over the
-  * cached corpus rather than the plan back to the input scan. The blocks
-  * are released when the fit returns. Trade-off: a local checkpoint is
+  * `LDA.fit` does, and calls `localCheckpoint()` on it, which persists
+  * it to memory and disk whether or not the input is cached; the first
+  * job fills the blocks and cuts the lineage, so a mini-batch task
+  * ships the sample over the cached corpus rather than the plan back to
+  * the input scan. The blocks are released when the fit returns. Trade-off: a local checkpoint is
   * not recomputed, so losing an executor that holds a corpus block fails
   * the fit instead of re-reading the input.
   */
