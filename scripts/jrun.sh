@@ -22,6 +22,6 @@ for p in java.base/java.lang java.base/java.lang.invoke \
 done
 # GRAFT_JAVA_OPTS: extra -D flags, e.g. for the streaming suite's RocksDB A/B:
 # -Dspark.sql.streaming.stateStore.providerClass=org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider
+# (UI off and the UTC session time zone come from graft.Sessions.)
 exec java -cp "$CP" $FLAGS ${GRAFT_JAVA_OPTS:-} \
-  -Dspark.ui.enabled=false -Dspark.sql.session.timeZone=UTC \
   "-Xmx${SPARK_DRIVER_MEM:-16g}" "$@"

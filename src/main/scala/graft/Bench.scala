@@ -3,26 +3,15 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    def build(): SparkSession = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.autoBroadcastJoinThreshold", "64m")
-      .getOrCreate()
     // warmup: JVM/codegen/parquet-footer costs paid outside the timings
     def warm(s: SparkSession): SparkSession = {
-      s.sparkContext.setLogLevel("WARN")
       graft.sources.Tables.names.foreach { t =>
         try s.read.parquet(s"$sfDir/$t.parquet").count()
         catch { case _: Throwable => }
       }
       s
     }
-    var spark = warm(build())
+    var spark = warm(Sessions.local())
     // a fatal executor error (e.g. one query OOMing the shared heap)
     // stops the SparkContext; without recovery EVERY later query in the
     // run "fails" with 'stopped SparkContext' — one bad iteration
@@ -33,7 +22,7 @@ object Bench {
     def session(): SparkSession = {
       if (spark.sparkContext.isStopped) {
         System.err.println("[bench] SparkContext stopped — rebuilding session")
-        spark = warm(build())
+        spark = warm(Sessions.local())
       }
       spark
     }
@@ -178,7 +167,7 @@ object Bench {
     // core count so the low-core scaling run cannot clobber the main
     // run's artifact (BENCH_r16–r19 all lost the 32-core file this way).
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT",
-      s"target/bench_c$cpus.json")
+      s"target/bench_c${Sessions.cpus}.json")
     try java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
       (json + "\n").getBytes(java.nio.charset.StandardCharsets.UTF_8))
     catch { case e: Throwable =>

@@ -22,16 +22,7 @@ object Cli {
 
   def main(args: Array[String]): Unit = {
     if (args.isEmpty) { usage(); sys.exit(2) }
-    val spark = SparkSession.builder()
-      .master(sys.env.getOrElse("SPARK_MASTER", "local[*]"))
-      .appName("graft")
-      .config("spark.sql.shuffle.partitions",
-        sys.env.getOrElse("SPARK_GRAFT_CPUS", "32"))
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.adaptive.enabled", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = sys.env.get("SPARK_MASTER").fold(Sessions.local())(Sessions.local(_))
     try run(spark, args.head, parseOpts(args.tail.toIndexedSeq))
     finally spark.stop()
   }

@@ -1,19 +1,10 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Local smoke runner: exercises SparkEntry.entry the way the driver
   * does (rows > 0 on sf0.001) and prints the row count + schema. */
 object Smoke {
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Sessions.local()
     val df = SparkEntry.entry(spark)
     println(s"[smoke] entry schema: ${df.schema.simpleString}")
     println(s"[smoke] entry rows: ${df.count()}")

@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
@@ -12,22 +11,7 @@ object Verify {
       case Array(a, b, f) => (a, b, Some(f.split(",").toSet))
     }
     def keep(name: String): Boolean = only.forall(_.contains(name))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    def build(): SparkSession = {
-      val s = SparkSession.builder()
-        .master(s"local[$cpus]")
-        .config("spark.sql.shuffle.partitions", cpus)
-        .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.ui.enabled", "false")
-        // events.parquet carries INT64 TIMESTAMP(NANOS) which Spark cannot
-        // read as a timestamp — surface it as BIGINT nanoseconds instead.
-        .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-        .config("spark.sql.adaptive.enabled", "true")
-        .getOrCreate()
-      s.sparkContext.setLogLevel("WARN")
-      s
-    }
-    var spark = build()
+    var spark = Sessions.local()
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => keep(kv._1)).foreach { case (name, fn) =>
       // a fatal executor error stops the SparkContext; without recovery
@@ -36,7 +20,7 @@ object Verify {
       // the failed query stays failed, the session is rebuilt
       if (spark.sparkContext.isStopped) {
         System.err.println("[verify] SparkContext stopped — rebuilding session")
-        spark = build()
+        spark = Sessions.local()
       }
       try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
         .parquet(s"$outDir/$name")

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFns
-import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
+import org.apache.spark.ml.clustering.KMeansModel
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -299,6 +299,15 @@ object IvfIndex {
     }
   }
 
+  /** The KMeans settings of every fitted cell router (this index's,
+    * [[Similarity.ivfTopK]]'s, [[Pq.ivfPqTopK]]'s and
+    * [[SemDedupIndex.buildKMeans]]'s): raw vectors, predictions in
+    * `_cell`. */
+  private[operators] def cellConfig(vecCol: String, nlist: Int, seed: Long,
+                                    cellIter: Int): graft.cluster.Clustering.Config =
+    graft.cluster.Clustering.Config(k = nlist, seed = seed, maxIter = cellIter,
+      normalize = false, vecCol = vecCol, predictionCol = "_cell")
+
   /** Fit the cell router and assign the corpus.
     * @param cellIter small on purpose: cells are a routing partition,
     *   not an analysis clustering — recall comes from nprobe.
@@ -311,13 +320,8 @@ object IvfIndex {
   def build(corpus: DataFrame, idCol: String, vecCol: String,
             nlist: Int = 16, seed: Long = 11L, cellIter: Int = 8,
             track: Boolean = true): IvfIndex = {
-    import org.apache.spark.ml.functions.array_to_vector
-    val corpusV = corpus.select(col(idCol), col(vecCol))
-      .withColumn("_features", array_to_vector(VectorFns.toDoubles(col(vecCol))))
-    val km = new KMeans().setK(nlist).setSeed(seed).setFeaturesCol("_features")
-      .setMaxIter(cellIter).setPredictionCol("_cell")
-    val model = km.fit(corpusV)
-    val router = new KMeansRouter(model)
+    val router = new KMeansRouter(graft.cluster.Clustering.fit(
+      corpus.select(col(idCol), col(vecCol)), cellConfig(vecCol, nlist, seed, cellIter)))
     val assigned0 = router.assign(corpus, idCol, vecCol)
     // assignment runs once; save/search both read it
     val assigned = if (track) graft.Caches.persist(assigned0)

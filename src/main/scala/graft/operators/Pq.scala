@@ -203,15 +203,10 @@ object Pq {
                 k: Int, nlist: Int = 8, nprobe: Int = 3,
                 cfg: Config = Config(), seed: Long = 11L,
                 cellIter: Int = 8): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-
     val corpusV = corpus
       .select(col(idCol), graft.functions.VectorFns.toDoubles(col(vecCol)).as("_v"))
-      .withColumn("_features", array_to_vector(col("_v")))
-    val km = new KMeans().setK(nlist).setSeed(seed).setMaxIter(cellIter)
-      .setFeaturesCol("_features").setPredictionCol("_cell")
-    val router = km.fit(corpusV)
+    val cellCfg = IvfIndex.cellConfig("_v", nlist, seed, cellIter)
+    val router = graft.cluster.Clustering.fit(corpusV, cellCfg)
 
     val spark = corpus.sparkSession
     import spark.implicits._
@@ -219,7 +214,7 @@ object Pq {
       .map { case (v, i) => (i, v.toArray) }.toSeq.toDF("_cell", "_centroid")
 
     // residual stream: v - centroid(cell), the quantity PQ encodes
-    val resid = router.transform(corpusV)
+    val resid = graft.cluster.Clustering.assign(router, corpusV, cellCfg)
       .join(broadcast(cents), Seq("_cell"))
       .select(col(idCol), col("_cell"),
         zip_with(col("_v"), col("_centroid"), (a, b) => a - b).as("_res"))

@@ -1,7 +1,7 @@
 package graft.operators
 
 import graft.functions.VectorFns
-import org.apache.spark.ml.clustering.{KMeans, KMeansModel}
+import org.apache.spark.ml.clustering.KMeansModel
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
@@ -239,14 +239,11 @@ object SemDedupIndex {
   def buildKMeans(corpus: DataFrame, idCol: String, vecCol: String,
                   nlist: Int = 16, seed: Long = 11L,
                   cellIter: Int = 8): SemDedupIndex = {
-    import org.apache.spark.ml.functions.array_to_vector
     val meta = Meta("kmeans", 0, nlist, seed, cellIter)
     val corpusV = corpus.select(col(idCol), col(vecCol))
-      .withColumn("_features", array_to_vector(VectorFns.toDoubles(col(vecCol))))
-    val model = new KMeans().setK(nlist).setSeed(seed)
-      .setFeaturesCol("_features").setMaxIter(cellIter)
-      .setPredictionCol("_cell").fit(corpusV)
-    val assigned = model.transform(corpusV)
+    val cfg = IvfIndex.cellConfig(vecCol, nlist, seed, cellIter)
+    val model = graft.cluster.Clustering.fit(corpusV, cfg)
+    val assigned = graft.cluster.Clustering.assign(model, corpusV, cfg)
       .select(col(idCol), VectorFns.l2Normalize(col(vecCol)).as("_nv"),
         col("_cell"))
     new SemDedupIndex(corpus.sparkSession, assigned, idCol, meta, Some(model))

@@ -55,21 +55,15 @@ object Similarity {
               qidCol: String, idCol: String, vecCol: String,
               k: Int, nlist: Int = 16, nprobe: Int = 4,
               seed: Long = 11L, cellIter: Int = 8): DataFrame = {
-    import org.apache.spark.ml.clustering.KMeans
-    import org.apache.spark.ml.functions.array_to_vector
-
-    val corpusV = corpus.select(col(idCol), col(vecCol))
-      .withColumn("_features", array_to_vector(VectorFns.toDoubles(col(vecCol))))
     // cellIter is deliberately small: IVF cells are a routing partition,
     // not an analysis clustering — recall comes from nprobe, so fully
     // converged centroids buy nothing but iteration jobs
-    val km = new KMeans().setK(nlist).setSeed(seed).setFeaturesCol("_features")
-      .setMaxIter(cellIter)
-      .setPredictionCol("_cell")
-    val model = km.fit(corpusV)
+    val corpusV = corpus.select(col(idCol), col(vecCol))
+    val cfg = IvfIndex.cellConfig(vecCol, nlist, seed, cellIter)
+    val model = graft.cluster.Clustering.fit(corpusV, cfg)
     // normalize the corpus once at assignment time — scoring per probe
     // pair is then a single native dot product
-    val assigned = model.transform(corpusV)
+    val assigned = graft.cluster.Clustering.assign(model, corpusV, cfg)
       .select(col(idCol), VectorFns.l2Normalize(col(vecCol)).as("_cnv"), col("_cell"))
 
     // centroid table as plain arrays (tiny — nlist rows)

@@ -1,14 +1,15 @@
 package org.apache.spark
 
-// Accessors for the package-private kernels of Spark's online LDA, so
-// graft.cluster.Topics can drive the variational-Bayes loop itself and
-// still compute exactly what OnlineLDAOptimizer computes: the same
-// corpus RDD, the same per-document E-step, the same Dirichlet
-// expectation and the same LocalLDAModel at the end. Like
+// The ML shims: accessors for package-private kernels of Spark ML.
+// GraftOnlineLdaShim and GraftLdaShim let graft.cluster.Topics drive the
+// online variational-Bayes loop itself and still compute exactly what
+// OnlineLDAOptimizer computes: the same corpus RDD, the same
+// per-document E-step, the same Dirichlet expectation and the same
+// LocalLDAModel at the end. GraftKMeansShim gives
+// graft.cluster.Clustering (and through it every KMeans fit in graft)
+// Spark's KMeans row solver without the estimator's extra jobs. Like
 // org.apache.spark.sql.GraftSqlShim these only forward; the objects sit
 // in the two packages whose private members they reach.
-// GraftKMeansShim does the same for graft.cluster.Clustering: Spark's
-// KMeans row solver without the estimator's extra jobs.
 package mllib.clustering {
 
   import breeze.linalg.{DenseMatrix => BDM, DenseVector => BDV}

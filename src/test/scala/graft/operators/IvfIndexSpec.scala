@@ -200,4 +200,34 @@ class IvfIndexSpec extends SparkSpec {
       .isInstanceOf[IvfIndex.SeededRouter])
     graft.Caches.release()
   }
+
+  test("build fits Spark's KMeans centers in fewer jobs than the estimator") {
+    import org.apache.spark.ListenerBusDrain
+    import org.apache.spark.ml.clustering.KMeans
+    import org.apache.spark.ml.functions.array_to_vector
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val emb = spark.read.parquet(s"${sf("sf0.001")}/embeddings.parquet")
+    def jobsOf[T](body: => T): (T, Int) = {
+      val jobs = new java.util.concurrent.atomic.AtomicInteger()
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+      }
+      ListenerBusDrain.drain(spark.sparkContext)
+      spark.sparkContext.addSparkListener(listener)
+      try {
+        val r = body
+        ListenerBusDrain.drain(spark.sparkContext)
+        (r, jobs.get())
+      } finally spark.sparkContext.removeSparkListener(listener)
+    }
+    val (idx, buildJobs) = jobsOf(IvfIndex.build(emb, "vec_id", "embedding", nlist = 8))
+    val (ref, refJobs) = jobsOf(new KMeans().setK(8).setSeed(11).setMaxIter(8)
+      .setFeaturesCol("_features")
+      .fit(emb.withColumn("_features",
+        array_to_vector(graft.functions.VectorFns.toDoubles(col("embedding"))))))
+    assert(idx.router.centers.map(_._2.toSeq).toSeq ==
+      ref.clusterCenters.map(_.toArray.toSeq).toSeq)
+    assert(buildJobs < refJobs, s"build ran $buildJobs jobs, the estimator $refJobs")
+    idx.close()
+  }
 }
