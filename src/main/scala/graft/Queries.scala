@@ -150,18 +150,10 @@ object Queries {
     (graft.text.TextPipeline.vocabulary(pm), vectorized, lda)
   })
 
-  /** Shared Word2Vec fit per (session, dir). */
-  private val fittedW2v = new Memo((s, d) => {
-    val ctx = T(s, d, "documents")
-      .select(TextFns.wordTokens(col("text")).as("context_words"))
-    graft.embed.Embeddings.train(ctx,
-      graft.embed.Embeddings.Config(vectorSize = 16, epochs = 2,
-        windowSize = 5, numPartitions = 1, seed = 1L))
-  })
-
-  /** Shared native-SGNS fit per (session, dir) — x32's model, trained
-    * with the reference's semantics (negative sampling + subsampling);
-    * minCount bounds the vocab so the driver-held weights stay small. */
+  /** Shared word2vec fit per (session, dir) — the one [[graft.embed.Sgns]]
+    * model x10, x18 and x32 analyze, trained with the reference's
+    * semantics (negative sampling + subsampling); minCount bounds the
+    * vocab so the driver-held weights stay small. */
   private val fittedSgns = new Memo((s, d) => {
     val ctx = T(s, d, "documents")
       .select(TextFns.wordTokens(col("text")).as("context_words"))
@@ -2434,14 +2426,15 @@ object Queries {
       Topics.describeTopicsWithWords(s, lda, vocab, maxTerms = 8)
     }},
 
-    rowsOnly("x10_word2vec_neighbors") { (s, d) =>
-      graft.embed.Embeddings.neighbors(fittedW2v(s, d), "spark", 5)
-        .select(col("word"), round(col("similarity"), 4).as("sim"))
-    },
+    rowsOnly("x10_word2vec_neighbors") { (s, d) => {
+      import s.implicits._
+      fittedSgns(s, d).neighbors("spark", 5)
+        .map { case (w, sim) => (w, math.rint(sim * 1e4) / 1e4) }
+        .toDF("word", "sim")
+    }},
 
-    // X1/X5 native-SGNS path: true skip-gram negative sampling with
-    // subsampling (the reference's actual gensim training semantics,
-    // which Spark ML W2V cannot express). Deterministic by
+    // X1/X5 SGNS: skip-gram negative sampling with subsampling (the
+    // reference's gensim training semantics). Deterministic by
     // construction (content-hash partitioning, splitmix64 RNG), so the
     // rows-only record is stable run-to-run. Emits each vocab word's
     // top neighbor — the structure signal, robust to float formatting.
@@ -2835,7 +2828,7 @@ object Queries {
 
     // X3/X5: analogy evaluation over the shared word2vec fit
     rowsOnly("x18_analogy_eval") { (s, d) => {
-      val vecs = graft.embed.Embeddings.collectVectors(fittedW2v(s, d))
+      val vecs = fittedSgns(s, d).collectVectors
       val analogies = graft.embed.Embeddings.analogiesFromPairs(
         Seq(("fast", "slow"), ("small", "big")), "antonyms") ++
         graft.embed.Embeddings.analogiesFromPairs(
@@ -4258,7 +4251,7 @@ object Queries {
 
     // Oracle-backed mirror of x18: the SAME driver-side 3CosAdd argmax
     // (Embeddings.predictAnalogies) over the `embeddings` fixture
-    // vectors instead of the W2V fit (which DuckDB cannot retrain), so
+    // vectors instead of the SGNS fit (which DuckDB cannot retrain), so
     // the analogy math — normalize, b-a+c target, excluded-candidate
     // argmax, tie-break — is hash-checked per question. The collect is
     // vocab-bounded by design (X3 is a driver-side evaluation; see

@@ -1,63 +1,17 @@
 package graft.embed
 
-import org.apache.spark.ml.feature.{Word2Vec, Word2VecModel}
 import org.apache.spark.sql.{DataFrame, SparkSession}
-import org.apache.spark.sql.functions._
 
 /** Community embeddings (SURVEY.md §2.10 X1–X5).
   *
   * The reference trains gensim word2vec SGNS over per-user subreddit
   * "sentences" (`ihop/community2vec.py:157-276`) with the window sized
-  * to the longest context (effectively unlimited). Two trainers:
-  * Spark ML `Word2Vec` (skip-gram + hierarchical softmax — fast,
-  * battle-tested, but no `negative`/`sample` knobs) and the native
-  * [[Sgns]] module (true skip-gram negative sampling with
-  * subsampling — the reference's actual training semantics, enabling
-  * its full 4-axis sweep via [[sgnsGridSearch]]). Same output
-  * contract either way: word → vector table, nearest neighbors,
-  * analogy accuracy. */
+  * to the longest context (effectively unlimited). The trainer is the
+  * native [[Sgns]] module (skip-gram negative sampling with
+  * subsampling, the reference's training semantics); this object holds
+  * what is scored on its vectors: analogy accuracy and the reference's
+  * 4-axis sweep, [[gridSearch]]. */
 object Embeddings {
-
-  /** Defaults mirror reference `ihop/community2vec.py:157-218`. */
-  final case class Config(
-      vectorSize: Int = 150,
-      epochs: Int = 5,
-      alpha: Double = 0.025,
-      minCount: Int = 0,
-      windowSize: Int = 1000, // "unlimited" — set to max context length
-      numPartitions: Int = 1,
-      seed: Long = 1L,
-      contextCol: String = "context_words")
-
-  def train(df: DataFrame, cfg: Config = Config()): Word2VecModel =
-    new Word2Vec()
-      .setInputCol(cfg.contextCol).setOutputCol("w2v_vec")
-      .setVectorSize(cfg.vectorSize).setMaxIter(cfg.epochs)
-      .setStepSize(cfg.alpha).setMinCount(cfg.minCount)
-      .setWindowSize(cfg.windowSize).setNumPartitions(cfg.numPartitions)
-      .setSeed(cfg.seed)
-      .fit(df)
-
-  /** word → vector table (the gensim KeyedVectors equivalent). */
-  def vectors(model: Word2VecModel): DataFrame = model.getVectors
-
-  /** Collected (word, embedding) pairs for driver-side evaluation.
-    * NOTE: Spark ML exposes no word frequencies, so the order is NOT
-    * gensim's frequency order — callers applying a `restrictVocab`
-    * truncation must supply frequency-ordered vectors themselves (or
-    * pass restrictVocab = vecs.size to disable truncation). */
-  def collectVectors(model: Word2VecModel): Seq[(String, Array[Float])] =
-    model.getVectors.collect()
-      .map(r => r.getString(0) -> r.getAs[org.apache.spark.ml.linalg.Vector](1)
-        .toArray.map(_.toFloat)).toSeq
-
-  /** S8: model persistence. */
-  def save(model: Word2VecModel, dir: String): Unit = model.write.overwrite().save(dir)
-  def load(dir: String): Word2VecModel = Word2VecModel.load(dir)
-
-  /** X4: nearest neighbors by cosine — Spark ML built-in. */
-  def neighbors(model: Word2VecModel, term: String, n: Int): DataFrame =
-    model.findSynonyms(term, n)
 
   // ------------------------------------------------------------ analogies
 
@@ -191,28 +145,10 @@ object Embeddings {
 
   // ----------------------------------------------------------- grid search
 
-  final case class GridResult(modelId: String, params: Map[String, String],
-                              accuracy: Double, detail: String,
-                              model: Word2VecModel)
-
-  /** Grid axes over every knob Spark ML Word2Vec exposes. The
-    * reference's own 4-D grid sweeps gensim's `negative`/`sample`
-    * (`params.yaml:68-74`), which have no Spark ML W2V equivalent —
-    * use [[sgnsGridSearch]] (native SGNS) for that exact sweep. */
-  final case class Grid(alphas: Seq[Double] = Seq(0.025),
-                        vectorSizes: Seq[Int] = Seq(150),
-                        windowSizes: Seq[Int] = Seq(1000),
-                        minCounts: Seq[Int] = Seq(0),
-                        epochsList: Seq[Int] = Seq(5),
-                        numPartitionsList: Seq[Int] = Seq(1)) {
-    def size: Int = alphas.size * vectorSizes.size * windowSizes.size *
-      minCounts.size * epochsList.size * numPartitionsList.size
-  }
-
   /** Reference model-id format (`ihop/community2vec.py:557-568`): param
     * keys sorted alphabetically, snake_case camelCased, each rendered
     * `key` + `value`, all joined with `_` —
-    * e.g. `alpha0.05_minCount0_vectorSize100_window5`. */
+    * e.g. `alpha0.05_negative20_sample0.0_vectorSize100`. */
   def modelId(params: Map[String, String]): String =
     params.toSeq.sortBy(_._1).map { case (k, v) =>
       val parts = k.split("_")
@@ -224,55 +160,45 @@ object Embeddings {
   def sectionsToStr(sections: Seq[SectionScore]): String =
     sections.map(s => s"${s.section}:${s.correct}/${s.total}").mkString(",")
 
-  /** X5: cartesian grid-search trainer — train each configuration,
-    * score on analogies, keep the best (ties → later config, matching
-    * the reference's `acc >= best_acc` update rule,
-    * `ihop/community2vec.py:476-505`). Pure driver orchestration; pass
-    * `metricsDir` to persist the reference's per-model accuracy CSV. */
-  def gridSearch(spark: SparkSession, df: DataFrame,
-                 base: Config, grid: Grid, analogies: Seq[Analogy],
+  /** One trained configuration of [[gridSearch]]. */
+  final case class GridResult(modelId: String, params: Map[String, String],
+                              accuracy: Double, detail: String,
+                              model: Sgns.Model)
+
+  /** X5: the [[Sgns]] sweep over the reference's 4-axis grid — alpha ×
+    * vector_size × sample × negative (`params.yaml:68-74`). Trains each
+    * configuration, scores it on analogies and keeps the best (ties →
+    * later config, matching the reference's `acc >= best_acc` update
+    * rule, `ihop/community2vec.py:476-505`). Pure driver orchestration;
+    * pass `metricsDir` to persist the per-model accuracy CSV
+    * ([[writePerformanceCsvRows]]). */
+  def gridSearch(spark: SparkSession, df: DataFrame, base: Sgns.Config,
+                 alphas: Seq[Double], vectorSizes: Seq[Int],
+                 samples: Seq[Double], negatives: Seq[Int],
+                 analogies: Seq[Analogy],
                  metricsDir: Option[String] = None): (GridResult, Seq[GridResult]) = {
     val results = for {
-      a <- grid.alphas; vs <- grid.vectorSizes; w <- grid.windowSizes
-      mc <- grid.minCounts; ep <- grid.epochsList; np <- grid.numPartitionsList
+      a <- alphas; vs <- vectorSizes; smp <- samples; neg <- negatives
     } yield {
-      val cfg = base.copy(alpha = a, vectorSize = vs, windowSize = w,
-        minCount = mc, epochs = ep, numPartitions = np)
-      val m = train(df, cfg)
-      val vecs = collectVectors(m)
-      val res = evaluateAnalogies(vecs, analogies, restrictVocab = vecs.size)
-      // gensim param names where the concept maps (window ≡ windowSize,
-      // workers ≡ numPartitions, epochs ≡ maxIter) → reference-shaped ids
+      val cfg = base.copy(alpha = a, vectorSize = vs, sample = smp,
+        negative = neg)
+      val m = Sgns.fit(df, cfg)
+      val res = evaluateAnalogies(m.collectVectors, analogies,
+        restrictVocab = m.words.length)
       val params = Map("alpha" -> a.toString, "vector_size" -> vs.toString,
-        "window" -> w.toString, "min_count" -> mc.toString,
-        "epochs" -> ep.toString, "workers" -> np.toString)
+        "sample" -> smp.toString, "negative" -> neg.toString)
       GridResult(modelId(params), params, res.overall,
         sectionsToStr(res.sections), m)
     }
-    metricsDir.foreach(dir => writePerformanceCsv(spark, results, dir))
+    metricsDir.foreach(dir => writePerformanceCsvRows(spark,
+      results.map(r => (r.modelId, r.accuracy, r.detail, r.params)), dir))
     (results.reduceLeft((b, r) => if (r.accuracy >= b.accuracy) r else b), results)
   }
-
-  /** Back-compat 2-axis sweep (alpha × vectorSize). */
-  def gridSearch(spark: SparkSession, df: DataFrame,
-                 base: Config,
-                 alphas: Seq[Double], vectorSizes: Seq[Int],
-                 analogies: Seq[Analogy]): (GridResult, Seq[GridResult]) =
-    gridSearch(spark, df, base,
-      Grid(alphas, vectorSizes, Seq(base.windowSize), Seq(base.minCount),
-        Seq(base.epochs), Seq(base.numPartitions)), analogies)
 
   /** The reference's `analogy_accuracy_results.csv` artifact — one row
     * per trained model: id, accuracy, per-section detail, then the
     * param columns (`ihop/community2vec.py:582-589`) — written through
     * the S7 single-file CSV sink. */
-  def writePerformanceCsv(spark: SparkSession, results: Seq[GridResult],
-                          dir: String): Unit =
-    writePerformanceCsvRows(spark,
-      results.map(r => (r.modelId, r.accuracy, r.detail, r.params)), dir)
-
-  /** Model-type-agnostic form of [[writePerformanceCsv]] (shared by the
-    * Spark ML sweep and the native [[Sgns]] sweep). */
   def writePerformanceCsvRows(spark: SparkSession,
                               results: Seq[(String, Double, String, Map[String, String])],
                               dir: String): Unit = {
@@ -288,37 +214,5 @@ object Embeddings {
     import scala.jdk.CollectionConverters._
     graft.sources.Writers.singleCsv(
       spark.createDataFrame(rows.asJava, schema), dir)
-  }
-
-  /** X5, FULL reference semantics: the native-SGNS sweep over the
-    * reference's exact 4-axis grid — alpha × vector_size × sample ×
-    * negative (`params.yaml:68-74`) — which the Spark ML sweep above
-    * cannot express (no `negative`/`sample` knobs in ML Word2Vec).
-    * Same id format, tie rule (`acc >= best` keeps the later config)
-    * and CSV artifact as [[gridSearch]]. */
-  final case class SgnsGridResult(modelId: String, params: Map[String, String],
-                                  accuracy: Double, detail: String,
-                                  model: Sgns.Model)
-  def sgnsGridSearch(spark: SparkSession, df: DataFrame, base: Sgns.Config,
-                     alphas: Seq[Double], vectorSizes: Seq[Int],
-                     samples: Seq[Double], negatives: Seq[Int],
-                     analogies: Seq[Analogy],
-                     metricsDir: Option[String] = None): (SgnsGridResult, Seq[SgnsGridResult]) = {
-    val results = for {
-      a <- alphas; vs <- vectorSizes; smp <- samples; neg <- negatives
-    } yield {
-      val cfg = base.copy(alpha = a, vectorSize = vs, sample = smp,
-        negative = neg)
-      val m = Sgns.fit(df, cfg)
-      val res = evaluateAnalogies(m.collectVectors, analogies,
-        restrictVocab = m.words.length)
-      val params = Map("alpha" -> a.toString, "vector_size" -> vs.toString,
-        "sample" -> smp.toString, "negative" -> neg.toString)
-      SgnsGridResult(modelId(params), params, res.overall,
-        sectionsToStr(res.sections), m)
-    }
-    metricsDir.foreach(dir => writePerformanceCsvRows(spark,
-      results.map(r => (r.modelId, r.accuracy, r.detail, r.params)), dir))
-    (results.reduceLeft((b, r) => if (r.accuracy >= b.accuracy) r else b), results)
   }
 }

@@ -262,11 +262,11 @@ object IvfIndex {
     def centers: Array[(Int, Array[Double])] =
       model.clusterCenters.zipWithIndex.map { case (v, i) => (i, v.toArray) }
     def assign(df: DataFrame, idCol: String, vecCol: String): DataFrame = {
-      import org.apache.spark.ml.functions.array_to_vector
-      model.setPredictionCol("_cell")
-        .transform(df.select(col(idCol), col(vecCol))
-          .withColumn("_features",
-            array_to_vector(VectorFns.toDoubles(col(vecCol)))))
+      // a router loaded from disk keeps the prediction column it was
+      // saved with, so the `_cell` column is set explicitly
+      val cfg = cellConfig(vecCol, model.getK, model.getSeed, model.getMaxIter)
+      graft.cluster.Clustering.assign(model.setPredictionCol(cfg.predictionCol),
+          df.select(col(idCol), col(vecCol)), cfg)
         .select(col(idCol), VectorFns.l2Normalize(col(vecCol)).as("_cnv"),
           col("_cell"))
     }

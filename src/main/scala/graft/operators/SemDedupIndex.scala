@@ -61,13 +61,13 @@ final class SemDedupIndex private (val spark: SparkSession,
         df.select(col(idCol), VectorFns.l2Normalize(col(vecCol)).as("_nv"),
           orthantCell(col(vecCol), meta.orthantBits).as("_cell"))
       case "kmeans" =>
-        import org.apache.spark.ml.functions.array_to_vector
         val m = router.getOrElse(throw new IllegalStateException(
           "kmeans index loaded without its router"))
-        m.setPredictionCol("_cell")
-          .transform(df.select(col(idCol), col(vecCol))
-            .withColumn("_features",
-              array_to_vector(VectorFns.toDoubles(col(vecCol)))))
+        // a router loaded from disk keeps the prediction column it was
+        // saved with, so the `_cell` column is set explicitly
+        val cfg = IvfIndex.cellConfig(vecCol, meta.nlist, meta.seed, meta.cellIter)
+        graft.cluster.Clustering.assign(m.setPredictionCol(cfg.predictionCol),
+            df.select(col(idCol), col(vecCol)), cfg)
           .select(col(idCol), VectorFns.l2Normalize(col(vecCol)).as("_nv"),
             col("_cell"))
       case t => throw new IllegalArgumentException(s"router type $t")

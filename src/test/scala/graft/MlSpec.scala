@@ -1,7 +1,7 @@
 package graft
 
 import graft.cluster.{Clustering, Topics}
-import graft.embed.Embeddings
+import graft.embed.{Embeddings, Sgns}
 import graft.export.{Annotation, Projection}
 import graft.text.TextPipeline
 import org.apache.spark.ml.linalg.SparseVector
@@ -107,11 +107,10 @@ class MlSpec extends SparkSpec {
       if (rnd.nextBoolean()) Seq("hockey", "nba", "nfl", "sports")
       else Seq("python", "scala", "rust", "coding")
     }.toDF("context_words")
-    val model = Embeddings.train(contexts,
-      Embeddings.Config(vectorSize = 8, epochs = 3, windowSize = 4,
+    val model = Sgns.fit(contexts,
+      Sgns.Config(vectorSize = 8, epochs = 3, window = 4,
         numPartitions = 1, seed = 1L))
-    val neighbors = Embeddings.neighbors(model, "hockey", 2)
-      .select("word").as[String].collect().toSet
+    val neighbors = model.neighbors("hockey", 2).map(_._1).toSet
     assert(neighbors.subsetOf(Set("nba", "nfl", "sports")),
       s"hockey neighbors were $neighbors")
   }

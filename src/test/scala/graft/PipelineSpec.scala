@@ -266,8 +266,9 @@ class PipelineSpec extends SparkSpec {
     val analogies = graft.embed.Embeddings.analogiesFromPairs(
       Seq(("a1", "b1"), ("a2", "b2")), "pairs")
     val (best, all) = graft.embed.Embeddings.gridSearch(spark, ctx,
-      graft.embed.Embeddings.Config(epochs = 1, windowSize = 3, numPartitions = 1),
-      alphas = Seq(0.025, 0.05), vectorSizes = Seq(4), analogies = analogies)
+      graft.embed.Sgns.Config(epochs = 1, window = 3, numPartitions = 1),
+      alphas = Seq(0.025, 0.05), vectorSizes = Seq(4), samples = Seq(0.0),
+      negatives = Seq(20), analogies = analogies)
     assert(all.size == 2)
     assert(best.accuracy == all.map(_.accuracy).max)
     // ties break toward the LATER configuration (reference acc >= best rule)

@@ -50,4 +50,13 @@ class QueriesMemoSpec extends SparkSpec {
     assert(kmeans(stagesOf("x06_kmeans_clusters", dir)) > 0)
     assert(kmeans(stagesOf("x07_cluster_metrics", dir)) == 0)
   }
+
+  test("x32 fits word2vec, x10 and x18 on the same dir reuse it") {
+    val dir = copyTables("documents")
+    val w2v = (s: Seq[String]) =>
+      s.count(n => n.contains("Sgns.scala") || n.contains("Word2Vec.scala"))
+    assert(w2v(stagesOf("x32_sgns_neighbors", dir)) > 0)
+    assert(w2v(stagesOf("x10_word2vec_neighbors", dir)) == 0)
+    assert(w2v(stagesOf("x18_analogy_eval", dir)) == 0)
+  }
 }

@@ -96,7 +96,7 @@ class GapSpec extends SparkSpec {
   }
 
   test("X5 grid: reference model-id format, full axes, metrics CSV round-trip") {
-    import graft.embed.Embeddings
+    import graft.embed.{Embeddings, Sgns}
     // id format: sorted keys, snake_case camelCased, key+value, '_'-joined
     // (ihop/community2vec.py:557-568)
     assert(Embeddings.modelId(Map(
@@ -112,26 +112,23 @@ class GapSpec extends SparkSpec {
     }.toDF("context_words")
     val analogies = Embeddings.analogiesFromPairs(
       Seq(("a1", "b1"), ("a2", "b2")), "pairs")
-    val grid = Embeddings.Grid(alphas = Seq(0.025, 0.05),
-      vectorSizes = Seq(4), windowSizes = Seq(3), minCounts = Seq(0),
-      epochsList = Seq(1), numPartitionsList = Seq(1, 2))
-    assert(grid.size == 4)
     val dir = java.nio.file.Files.createTempDirectory("gridcsv").toString
     val (best, all) = Embeddings.gridSearch(spark, ctx,
-      Embeddings.Config(epochs = 1, windowSize = 3), grid, analogies,
+      Sgns.Config(epochs = 1, window = 3),
+      alphas = Seq(0.025, 0.05), vectorSizes = Seq(4), samples = Seq(0.0),
+      negatives = Seq(2, 5), analogies = analogies,
       metricsDir = Some(s"$dir/metrics"))
     assert(all.size == 4)
     assert(all.map(_.modelId).distinct.size == 4)
     assert(all.forall(_.modelId.matches(
-      "alpha[\\d.]+_epochs1_minCount0_vectorSize4_window3_workers[12]")))
+      "alpha[\\d.]+_negative[25]_sample0\\.0_vectorSize4")))
     assert(best.accuracy == all.map(_.accuracy).max)
     // the CSV artifact round-trips with one row per model and the
     // reference's column layout (id, acc, detail, then param columns)
     val csv = spark.read.option("header", "true").csv(s"$dir/metrics")
     assert(csv.count() == 4)
     assert(csv.columns.toSeq == Seq("model_id", "analogy_acc",
-      "detailed_analogy", "alpha", "epochs", "min_count", "vector_size",
-      "window", "workers"))
+      "detailed_analogy", "alpha", "negative", "sample", "vector_size"))
     val accs = csv.select("model_id", "analogy_acc").collect()
       .map(r => r.getString(0) -> r.getString(1).toDouble).toMap
     all.foreach(r => assert(accs(r.modelId) == r.accuracy))
@@ -146,9 +143,9 @@ class GapSpec extends SparkSpec {
     assert(Clustering.load(s"$dir/km").clusterCenters.length == 2)
 
     val ctx = (1 to 50).map(_ => Seq("x", "y", "z")).toDF("context_words")
-    val w2v = graft.embed.Embeddings.train(ctx,
-      graft.embed.Embeddings.Config(vectorSize = 4, epochs = 1, windowSize = 3))
-    graft.embed.Embeddings.save(w2v, s"$dir/w2v")
-    assert(graft.embed.Embeddings.load(s"$dir/w2v").getVectors.count() == 3)
+    val w2v = graft.embed.Sgns.fit(ctx,
+      graft.embed.Sgns.Config(vectorSize = 4, epochs = 1, window = 3))
+    w2v.save(spark, s"$dir/w2v")
+    assert(graft.embed.Sgns.load(spark, s"$dir/w2v").vectors(spark).count() == 3)
   }
 }

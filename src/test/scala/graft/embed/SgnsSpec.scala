@@ -163,7 +163,7 @@ class SgnsSpec extends SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("sgnsgrid").toString
     // axes shaped like the reference's params.yaml param_grid — the
     // sweep Spark ML W2V cannot run (no sample/negative knobs)
-    val (best, all) = Embeddings.sgnsGridSearch(spark, d,
+    val (best, all) = Embeddings.gridSearch(spark, d,
       fastCfg.copy(epochs = 1),
       alphas = Seq(0.08, 0.05), vectorSizes = Seq(8),
       samples = Seq(0.0, 0.001), negatives = Seq(2, 5),
